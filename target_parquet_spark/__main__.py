@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import tempfile
 
@@ -94,7 +95,10 @@ def main(argv: list[str] | None = None) -> int:
             for line in sys.stdin:
                 tmp.write(line)
             path = tmp.name
-        result = target.run_path(path)
+        try:
+            result = target.run_path(path)
+        finally:
+            os.remove(path)
 
     counts = result["metrics"]["recordCount"]
     print(

@@ -34,7 +34,17 @@ import os
 
 from pyspark.sql import DataFrame
 
-__all__ = ["ParquetStreamSink", "read_stream_output"]
+__all__ = ["ParquetStreamSink", "read_stream_output", "write_json_atomic"]
+
+
+def write_json_atomic(path: str, payload, **dump_kw) -> None:
+    """Write a JSON sidecar through a temp file and ``os.replace``: a crash
+    or a failed dump leaves the previous file whole, never a truncated
+    one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(payload, fh, **dump_kw)
+    os.replace(tmp, path)
 
 
 class ParquetStreamSink:
@@ -70,8 +80,10 @@ class ParquetStreamSink:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)
         if key_properties is not None:
-            with open(os.path.join(path, "_key_properties.json"), "w") as fh:
-                json.dump({"key_properties": key_properties}, fh)
+            write_json_atomic(
+                os.path.join(path, "_key_properties.json"),
+                {"key_properties": key_properties},
+            )
         return path
 
     def row_count(self, stream: str) -> int:

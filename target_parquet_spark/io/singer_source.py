@@ -36,7 +36,9 @@ from target_parquet_spark.schema import ResolvedField
 
 __all__ = [
     "ENVELOPE_SCHEMA",
+    "with_input_file",
     "parse_envelope",
+    "position_literal",
     "raw_record_struct",
     "decode_records_jvm",
     "decode_records_exact",
@@ -57,18 +59,44 @@ ENVELOPE_SCHEMA = T.StructType(
 )
 
 
-def parse_envelope(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Text lines -> parsed envelope + ``_mid`` arrival-order id.
+def with_input_file(lines: DataFrame) -> DataFrame:
+    """Keep each line's input file (modification time in ms, path) for
+    :func:`parse_envelope`'s arrival order.  Apply it to the file-source
+    DataFrame itself: ``_metadata`` does not resolve inside
+    ``foreachBatch``."""
+    return lines.select(
+        "value",
+        F.unix_millis("_metadata.file_modification_time").alias("_file_mtime"),
+        F.col("_metadata.file_path").alias("_file"),
+    )
 
-    ``monotonically_increasing_id`` is monotone in file order for a text
-    scan, which is exactly the ordering Singer semantics need: a RECORD
-    belongs to the latest preceding SCHEMA of its stream.
+
+def parse_envelope(lines: DataFrame, value_col: str = "value") -> DataFrame:
+    """Text lines -> parsed envelope + ``_pos`` arrival position.
+
+    ``_pos`` is the struct (file modification time, file path, line id):
+    files in the order the streaming file source admits them, lines in
+    file order within a file.  ``monotonically_increasing_id`` alone is
+    not an arrival order across files, because a scan numbers a larger
+    file's lines first.  Lines without :func:`with_input_file`'s columns
+    count as one file.  A RECORD belongs to the latest preceding SCHEMA of
+    its stream.
     """
+    cols = set(lines.columns)
+    mtime = F.col("_file_mtime") if "_file_mtime" in cols else F.lit(0).cast("long")
+    path = F.col("_file") if "_file" in cols else F.lit("")
     return (
-        lines.withColumn("_mid", F.monotonically_increasing_id())
+        lines.withColumn(
+            "_pos",
+            F.struct(
+                mtime.alias("mtime"),
+                path.alias("file"),
+                F.monotonically_increasing_id().alias("line"),
+            ),
+        )
         .withColumn("_msg", F.from_json(F.col(value_col), ENVELOPE_SCHEMA))
         .select(
-            "_mid",
+            "_pos",
             F.col("_msg.type").alias("msg_type"),
             F.col("_msg.stream").alias("stream"),
             F.col("_msg.schema").alias("schema_json"),
@@ -76,6 +104,15 @@ def parse_envelope(lines: DataFrame, value_col: str = "value") -> DataFrame:
             F.col("_msg.record").alias("record_json"),
             F.col("_msg.value").alias("state_json"),
         )
+    )
+
+
+def position_literal(pos) -> Column:
+    """A collected ``_pos`` value as a literal comparable with ``_pos``."""
+    return F.struct(
+        F.lit(pos.mtime).cast("long").alias("mtime"),
+        F.lit(pos.file).alias("file"),
+        F.lit(pos.line).cast("long").alias("line"),
     )
 
 

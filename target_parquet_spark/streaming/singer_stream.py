@@ -7,10 +7,10 @@ batch buffer; singer-sdk drain loop).  The Spark-native shape:
 - source: ``spark.readStream.text(dir)`` over a drop-directory of Singer
   message files (the file source is the durable stand-in for a stdin pipe;
   any line-oriented streaming source — Kafka, socket — plugs in the same).
-- ``foreachBatch``: each micro-batch IS the reference's batch buffer (B1).
-  Inside the batch the existing batch-path machinery runs unchanged:
-  envelope parse (JVM ``from_json``), SCHEMA collect (rare, driver-side
-  DDL), per-stream vectorized decode + validation, parquet append.
+- ``foreachBatch``: each micro-batch IS the reference's batch buffer (B1),
+  and runs the batch target's record pipeline (target.py) on it: SCHEMA
+  versions routed by arrival position, the orphan check, the last STATE,
+  decode, validation and parquet append.
 - the checkpoint directory is Spark's commit log == Singer STATE (S4): on
   restart, already-committed files are not re-ingested.  The latest STATE
   message seen is additionally written to ``state.json`` per epoch so a
@@ -20,74 +20,83 @@ batch buffer; singer-sdk drain loop).  The Spark-native shape:
 Schema registry semantics: a SCHEMA message governs all later RECORDs of
 its stream — across micro-batches — until re-declared (schema evolution →
 version-append + mergeSchema read, BUG-4 fixed; reference
-tests/README.md:73-87).  The registry lives on the driver (exactly where
-the reference kept its sink registry, reference writers.py:14-24) and is
-persisted to ``_schema_registry.json`` in the output root after every
-SCHEMA message — committed micro-batches are NOT replayed on restart, so
-a relaunched target reloads stream DDL from the sidecar, not the stream.
+tests/README.md:73-87).  Each micro-batch starts from one carried version
+per stream, so SCHEMA messages inside the batch split a stream into
+versions exactly as in a batch run.  The registry lives on the driver
+(exactly where the reference kept its sink registry, reference
+writers.py:14-24) and is persisted to ``_schema_registry.json`` in the
+output root — committed micro-batches are NOT replayed on restart, so a
+relaunched target reloads stream DDL from the sidecar, not the stream.
+What a stream needs beyond a batch run is here: that registry with its
+widened columns, the rewrite of history already on disk when a column
+widens, running metric totals, and the per-epoch sidecars.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from target_parquet_spark.io.parquet_sink import ParquetStreamSink
-from target_parquet_spark.io.singer_source import (
-    decode_records_jvm,
-    parse_envelope,
-    raw_record_struct,
-)
-from target_parquet_spark.schema import resolve_schema
+from target_parquet_spark.io.parquet_sink import write_json_atomic
+from target_parquet_spark.io.singer_source import with_input_file
+from target_parquet_spark.schema import ResolvedField
+from target_parquet_spark.target import SingerTarget
+
+# Unused here, kept because perfbench/tracing.py patches them on this module.
+from target_parquet_spark.io.singer_source import decode_records_jvm, parse_envelope  # noqa: F401
+from target_parquet_spark.schema import resolve_schema  # noqa: F401
 
 __all__ = ["SingerStreamTarget"]
 
 
-class SingerStreamTarget:
-    """Streaming Singer target.  Config keys are the batch target's
-    (filepath, file_naming_scheme, compression, fixed_headers,
-    partition_cols, max_records_per_file) plus ``checkpoint``."""
+class SingerStreamTarget(SingerTarget):
+    """Streaming Singer target.  Config keys are the batch target's plus
+    ``checkpoint``."""
 
     def __init__(self, spark: SparkSession, config: dict | None = None):
-        self.spark = spark
-        self.config = dict(config or {})
+        config = dict(config or {})
         # A STREAMING target must resolve each stream to the SAME
         # directory on every relaunch: the batch default
         # "{stream}-{timestamp}" would fragment output across restarts,
         # break the widening rewrite (it would probe a fresh empty dir),
         # and reset metrics.  Timestamped names remain available by
         # configuring file_naming_scheme explicitly.
-        self.config.setdefault("file_naming_scheme", "{stream}")
-        self.sink = ParquetStreamSink(self.config)
+        config.setdefault("file_naming_scheme", "{stream}")
+        super().__init__(spark, config)
         self.checkpoint = self.config.get("checkpoint") or os.path.join(
             self.sink.root, "_checkpoint"
         )
-        # remote-$ref resolution config, identical to the batch target's
-        # (ref_base_dir / ref_registry / ref_registry_path sidecar file)
-        self.ref_base_dir = self.config.get("ref_base_dir")
-        self.ref_registry = self.config.get("ref_registry")
-        reg_path = self.config.get("ref_registry_path")
-        if reg_path:
-            from target_parquet_spark.validation import load_ref_registry
-
-            loaded = load_ref_registry(reg_path)
-            self.ref_registry = {**loaded, **(self.ref_registry or {})}
-        # stream -> (schema dict, key_properties, version_idx,
-        #            widened column map {name: [type_id, format]})
-        self._registry: dict[str, tuple] = {}
+        # stream -> {"schema", "key_properties",
+        #            "widened": {column: [type_id, format]}}
+        self._registry: dict[str, dict] = {}
+        if os.path.isfile(self._sidecar("_schema_registry.json")):
+            with open(self._sidecar("_schema_registry.json")) as fh:
+                self._registry = json.load(fh)
+        # Running totals across relaunches — committed batches are not
+        # replayed, so starting from zero would lose prior counts.
         self._metrics: dict[str, int] = {}
-        self._load_registry()
-        self._load_metrics()
+        self._violations: dict[str, int] = {}
+        try:
+            with open(self._sidecar("job_metrics.json")) as fh:
+                saved = json.load(fh)
+            self._metrics = dict(saved.get("recordCount", {}))
+            self._violations = dict(saved.get("validationViolations", {}))
+        except (OSError, ValueError):
+            pass
+
+    def _sidecar(self, name: str) -> str:
+        return os.path.join(self.sink.root, name)
 
     # -- public API ----------------------------------------------------------
 
     def start(self, input_dir: str, available_now: bool = False):
         """Begin ingesting ``*.jsonl``-style Singer line files dropped into
         ``input_dir``.  Returns the StreamingQuery."""
-        lines = self.spark.readStream.text(input_dir)
+        lines = with_input_file(self.spark.readStream.text(input_dir))
         writer = (
             lines.writeStream.foreachBatch(self._process_batch)
             .option("checkpointLocation", self.checkpoint)
@@ -100,78 +109,68 @@ class SingerStreamTarget:
     # -- micro-batch processor ----------------------------------------------
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        env = parse_envelope(batch_df)
-        env = env.persist()
-        try:
-            self._apply_schemas(env)
-            streams_in_batch = [
-                r.stream
-                for r in env.filter(F.col("msg_type") == "RECORD")
-                .select("stream")
-                .distinct()
-                .collect()
-            ]
-            for stream in streams_in_batch:
-                self._write_stream_records(env, stream)
-            self._emit_state(env, epoch_id)
-        finally:
-            env.unpersist()
+        carried = {
+            s: (e["schema"], e["key_properties"]) for s, e in self._registry.items()
+        }
+        versions, widened, state, metrics = self._ingest(batch_df, carried)
 
-    def _apply_schemas(self, env: DataFrame) -> None:
-        rows = (
-            env.filter(F.col("msg_type") == "SCHEMA")
-            .select("_mid", "stream", "schema_json", "key_properties")
-            .orderBy("_mid")
-            .collect()
+        registry = {
+            s: {
+                "schema": vs[-1].schema,
+                "key_properties": vs[-1].key_properties,
+                "widened": {n: [f.type_id, f.format] for n, f in widened[s].items()},
+            }
+            for s, vs in versions.items()
+        }
+        if registry != self._registry:
+            self._registry = registry
+            write_json_atomic(self._sidecar("_schema_registry.json"), registry)
+        for total, key in (
+            (self._metrics, "recordCount"),
+            (self._violations, "validationViolations"),
+        ):
+            for s, n in metrics[key].items():
+                total[s] = total.get(s, 0) + n
+        # Once per micro-batch — the reference rewrote this file per RECORD
+        # (O(n^2) I/O anti-pattern, reference writers.py:52-74).
+        write_json_atomic(
+            self._sidecar("job_metrics.json"),
+            {"recordCount": self._metrics, "validationViolations": self._violations},
         )
-        from target_parquet_spark.schema import widen_versions
-
-        for r in rows:
-            prev = self._registry.get(r.stream)
-            version = prev[2] + 1 if prev else 0
-            schema = json.loads(r.schema_json) if r.schema_json else {}
-            # Mid-stream TYPE changes: accumulate widened column types
-            # across versions (same contract as the batch target — parquet
-            # mergeSchema cannot reconcile conflicting types, so the
-            # output dir must be written widened to stay readable).  The
-            # widened map persists in the registry and only grows.
-            widened: dict[str, list] = dict(prev[3]) if prev else {}
-            if prev is not None:
-                fixed = (self.config.get("fixed_headers") or {}).get(r.stream)
-                old_fields = self._apply_overrides(
-                    resolve_schema(prev[0], fixed_headers=fixed), widened
-                )
-                new_fields = resolve_schema(schema, fixed_headers=fixed)
-                fresh = widen_versions([old_fields, new_fields])
-                if fresh:
-                    # Columns already on disk under the NARROW type must be
-                    # rewritten before any widened batch lands, or the dir
-                    # becomes unreadable (mergeSchema cannot reconcile the
-                    # types) — unlike the batch target, a stream cannot see
-                    # future versions up front.  Only rewrite columns whose
-                    # on-disk type actually differs from the widened target:
-                    # widen_versions reports every conflict, including a tap
-                    # re-declaring its original narrow schema after a past
-                    # widening (standard on restart), where the fold lands
-                    # back on the type already written — rewriting then would
-                    # be an O(all data) directory swap per restart.
-                    old_by_name = {f.name: f for f in old_fields}
-                    need = {
-                        name: f
-                        for name, f in fresh.items()
-                        if name not in old_by_name
-                        or (old_by_name[name].type_id, old_by_name[name].format)
-                        != (f.type_id, f.format)
-                    }
-                    if need:
-                        self._rewrite_widened(r.stream, need)
-                    for name, f in fresh.items():
-                        widened[name] = [f.type_id, f.format]
-            self._registry[r.stream] = (
-                schema, list(r.key_properties or []), version, widened
+        if state is not None:
+            write_json_atomic(
+                self._sidecar("state.json"), {"epoch": epoch_id, "state": state}
             )
-        if rows:
-            self._save_registry()
+
+    def _widen(self, stream, vers):
+        """Widening only grows across batches: a column an earlier batch
+        widened stays widened for every later version.  A column this
+        batch newly widens is rewritten in the history already on disk
+        before the batch writes, because a stream cannot see future
+        versions up front the way a batch run does."""
+        on_disk = {
+            n: ResolvedField(n, t, fmt, True)
+            for n, (t, fmt) in self._registry.get(stream, {}).get("widened", {}).items()
+        }
+        fresh = super()._widen(stream, vers, on_disk)
+        if fresh and vers[0].pos is None:
+            # Only rewrite columns whose on-disk type differs from the
+            # widened one: a tap re-declaring its original narrow schema
+            # after a past widening (standard on restart) folds back onto
+            # the type already written, and rewriting then would be an
+            # O(all data) directory swap per restart.
+            written = {
+                f.name: f.spark_type
+                for f in self._fields(stream, vers[0].schema, on_disk)
+            }
+            need = {
+                n: f
+                for n, f in fresh.items()
+                if n in written and written[n] != f.spark_type
+            }
+            if need:
+                self._rewrite_widened(stream, need)
+        return {**on_disk, **fresh}
 
     def _rewrite_widened(self, stream: str, fresh: dict) -> None:
         """One-time type-widening compaction of a stream's existing output:
@@ -183,8 +182,6 @@ class SingerStreamTarget:
         sink's compression and partition layout (the data files of a
         partitioned stream live in key=value subdirs — the parquet probe
         walks recursively for exactly that reason)."""
-        import shutil
-
         d = self.sink.stream_dir(stream)
         has_parquet = os.path.isdir(d) and any(
             f.endswith(".parquet")
@@ -194,12 +191,9 @@ class SingerStreamTarget:
         if not has_parquet:
             return
         df = self.spark.read.option("mergeSchema", "true").parquet(d)
-        from target_parquet_spark.schema import ResolvedField
-
         for name, f in fresh.items():
             if name in df.columns:
-                rf = ResolvedField(name, f.type_id, f.format, True)
-                df = df.withColumn(name, F.col(name).cast(rf.spark_type))
+                df = df.withColumn(name, F.col(name).cast(f.spark_type))
         tmp = d.rstrip("/") + ".widening"
         writer = df.write.mode("overwrite").option(
             "compression", self.sink.compression
@@ -221,160 +215,3 @@ class SingerStreamTarget:
         os.rename(d, old)
         os.rename(tmp, d)
         shutil.rmtree(old, ignore_errors=True)
-
-    @staticmethod
-    def _apply_overrides(fields, widened: dict):
-        from target_parquet_spark.schema import ResolvedField
-
-        if not widened:
-            return fields
-        return [
-            ResolvedField(f.name, widened[f.name][0], widened[f.name][1], True)
-            if f.name in widened
-            else f
-            for f in fields
-        ]
-
-    def _load_metrics(self) -> None:
-        """Resume recordCount totals across relaunches — committed batches
-        are not replayed, so starting from zero would lose prior counts."""
-        p = os.path.join(self.sink.root, "job_metrics.json")
-        if os.path.isfile(p):
-            try:
-                with open(p) as fh:
-                    self._metrics = dict(
-                        json.load(fh).get("recordCount", {})
-                    )
-            except (OSError, ValueError):
-                self._metrics = {}
-
-    # -- registry persistence (restart DDL: batches are not replayed) --------
-
-    @property
-    def _registry_path(self) -> str:
-        return os.path.join(self.sink.root, "_schema_registry.json")
-
-    def _load_registry(self) -> None:
-        if os.path.isfile(self._registry_path):
-            with open(self._registry_path) as fh:
-                raw = json.load(fh)
-            self._registry = {
-                s: (
-                    v["schema"],
-                    v["key_properties"],
-                    v["version"],
-                    v.get("widened", {}),
-                )
-                for s, v in raw.items()
-            }
-
-    def _save_registry(self) -> None:
-        payload = {
-            s: {
-                "schema": schema,
-                "key_properties": kp,
-                "version": ver,
-                "widened": widened,
-            }
-            for s, (schema, kp, ver, widened) in self._registry.items()
-        }
-        tmp = self._registry_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, self._registry_path)
-
-    def _write_stream_records(self, env: DataFrame, stream: str) -> None:
-        reg = self._registry.get(stream)
-        if reg is None:
-            # RECORD whose stream has no SCHEMA in the registry (this or
-            # any earlier checkpointed batch).  Strict mode fails the
-            # query — the batch target's contract (SDK record-before-
-            # schema).  Lenient skips: in a long-lived stream the SCHEMA
-            # may simply be in flight, and failing the whole query for
-            # one early record is the wrong default.
-            if self.config.get("strict_validation"):
-                from target_parquet_spark.target import SingerValidationError
-
-                raise SingerValidationError(
-                    f"RECORD for stream {stream!r} arrived before its "
-                    "SCHEMA message"
-                )
-            return
-        schema, key_properties, _version, widened = reg
-        fixed = (self.config.get("fixed_headers") or {}).get(stream)
-        fields = self._apply_overrides(
-            resolve_schema(schema, fixed_headers=fixed), widened
-        )
-        records = env.filter(
-            (F.col("msg_type") == "RECORD") & (F.col("stream") == stream)
-        )
-        parsed = records.withColumn(
-            "_rec", F.from_json(F.col("record_json"), raw_record_struct(fields))
-        )
-        # Key-integrity parity with the batch target: key properties must
-        # resolve to columns, and every record must carry them non-null —
-        # structural guarantees, enforced in every validation mode via
-        # the SAME helpers the batch target runs (no twin to drift).
-        from target_parquet_spark.target import (
-            enforce_keys_present,
-            enforce_undeclared_keys,
-        )
-
-        enforce_undeclared_keys(stream, fields, key_properties)
-        enforce_keys_present(stream, parsed, fields, key_properties)
-
-        # Validation parity with the batch target (V1-V4): strict fails
-        # the streaming query before the batch writes; lenient with a
-        # quarantine_path reroutes invalid records and keeps the main
-        # sink clean; plain lenient passes through.
-        from target_parquet_spark.validation import compile_predicate
-
-        pred = compile_predicate(
-            schema,
-            source_col="_rec",
-            raw_json_col="record_json",
-            declared_cols=[f.name for f in fields],
-            ref_base_dir=self.ref_base_dir,
-            ref_registry=self.ref_registry,
-        )
-        n_bad = 0
-        if self.config.get("strict_validation"):
-            from target_parquet_spark.target import SingerValidationError
-
-            n_bad = parsed.filter(~pred).count()
-            if n_bad:
-                raise SingerValidationError(
-                    f"stream {stream!r}: {n_bad} record(s) failed schema "
-                    "validation in streaming batch"
-                )
-        elif self.config.get("quarantine_path"):
-            from target_parquet_spark.target import quarantine_invalid
-
-            parsed, n_bad = quarantine_invalid(
-                parsed, pred, stream, self.config["quarantine_path"]
-            )
-        typed = decode_records_jvm(parsed, fields)
-        self.sink.write(stream, typed, key_properties=key_properties)
-        self._metrics[stream] = (
-            self._metrics.get(stream, 0) + records.count() - n_bad
-        )
-        self._write_metrics()
-
-    def _emit_state(self, env: DataFrame, epoch_id: int) -> None:
-        rows = (
-            env.filter(F.col("msg_type") == "STATE")
-            .select("_mid", "state_json")
-            .orderBy(F.col("_mid").desc())
-            .limit(1)
-            .collect()
-        )
-        if rows and rows[0].state_json:
-            payload = {"epoch": epoch_id, "state": json.loads(rows[0].state_json)}
-            with open(os.path.join(self.sink.root, "state.json"), "w") as fh:
-                json.dump(payload, fh)
-
-    def _write_metrics(self) -> None:
-        # Once per micro-batch — the reference rewrote this file per RECORD
-        # (O(n^2) I/O anti-pattern, reference writers.py:52-74).
-        with open(os.path.join(self.sink.root, "job_metrics.json"), "w") as fh:
-            json.dump({"recordCount": dict(self._metrics)}, fh)

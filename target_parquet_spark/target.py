@@ -1,4 +1,4 @@
-"""The batch Singer target: message lines in, per-stream Parquet out.
+"""The Singer target: message lines in, per-stream Parquet out.
 
 End-to-end equivalent of the reference's CLI pipeline (reference
 target_parquet/target.py + singer-sdk Target.listen), restructured for
@@ -9,9 +9,9 @@ Spark's execution model:
 - SCHEMA and STATE messages (rare, tiny) are collected to the driver —
   stream DDL is driver-side by nature (S2/S4).
 - Per stream × schema-version, records are routed by arrival order
-  (``_mid`` ranges), decoded, validated and appended to the stream's
-  parquet directory (B1/B2/W1-W4; BUG-4 fixed by version-append +
-  mergeSchema read).
+  (``_pos`` ranges: input file, then line), decoded, validated and
+  appended to the stream's parquet directory (B1/B2/W1-W4; BUG-4 fixed by
+  version-append + mergeSchema read).
 - Job metrics are observed on the write itself (``df.observe``) and
   ``job_metrics.json`` is written ONCE per run — the reference rewrote it
   per record, an O(n²) anti-pattern called out in SURVEY §4 (reference
@@ -23,6 +23,11 @@ metrics (the reference silently passes the raw record, sinks.py:136-139).
 Strict: any invalid record fails the run *before* anything is written.
 BUG-2 fix: nulls in non-nullable columns are counted the same way — strict
 rejects, lenient writes a readable file with nulls.
+
+This is the one record pipeline: ``SingerTarget.run_lines`` runs it over a
+whole input, and the streaming target (streaming/singer_stream.py) runs it
+over each micro-batch with the stream versions carried in from earlier
+batches.
 """
 
 from __future__ import annotations
@@ -33,15 +38,17 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from target_parquet_spark.io.parquet_sink import ParquetStreamSink
+from target_parquet_spark.io.parquet_sink import ParquetStreamSink, write_json_atomic
 from target_parquet_spark.io.singer_source import (
     decode_records_exact,
     decode_records_jvm,
     parse_envelope,
+    position_literal,
     raw_record_struct,
+    with_input_file,
 )
 from target_parquet_spark.schema import ResolvedField, resolve_schema, widen_versions
-from target_parquet_spark.validation import compile_predicate
+from target_parquet_spark.validation import compile_predicate, load_ref_registry
 
 __all__ = ["SingerTarget", "SingerValidationError"]
 
@@ -54,8 +61,7 @@ def enforce_undeclared_keys(stream, fields, key_properties) -> None:
     """Key properties must be resolvable columns, or the key-integrity
     check is silently vacuous — exactly the malformed-schema case most
     likely to carry keyless records.  Also fails a fixed_headers
-    projection that drops its own primary key.  Shared by the batch and
-    streaming targets so the two contracts cannot drift."""
+    projection that drops its own primary key."""
     undeclared_keys = sorted(set(key_properties) - {f.name for f in fields})
     if undeclared_keys:
         raise SingerValidationError(
@@ -70,8 +76,7 @@ def enforce_keys_present(stream, parsed, fields, key_properties) -> None:
     every declared key property must be present and non-null in every
     record, regardless of validation mode — key integrity is a structural
     guarantee, not a JSON-schema keyword.  One column-null count over the
-    already-parsed batch, failing BEFORE anything is written.  Shared by
-    the batch and streaming targets."""
+    already-parsed batch, failing BEFORE anything is written."""
     key_cols = [f.name for f in fields if f.name in set(key_properties)]
     if not key_cols:
         return
@@ -99,8 +104,7 @@ def quarantine_invalid(parsed, pred, stream, quarantine_root):
     when something failed: an unconditional write job would litter an
     empty directory per clean stream-version (which replay tooling would
     then pick up) and pay a write job for nothing.  Returns
-    (valid_parsed, n_quarantined).  Shared by the batch and streaming
-    targets."""
+    (valid_parsed, n_quarantined)."""
     bad = parsed.filter(~pred).select(
         F.lit(stream).alias("stream"), "record_json"
     )
@@ -112,11 +116,16 @@ def quarantine_invalid(parsed, pred, stream, quarantine_root):
 
 
 class _StreamVersion:
-    def __init__(self, mid: int, schema: dict, key_properties: list[str]):
-        self.mid = mid
+    """One SCHEMA of a stream and the RECORDs it governs: those after
+    ``pos`` and before ``end_pos`` (the next version's SCHEMA) in arrival
+    order.  ``pos`` None marks a version carried in from earlier input,
+    which governs from the start."""
+
+    def __init__(self, pos, schema: dict, key_properties: list[str]):
+        self.pos = pos
         self.schema = schema
         self.key_properties = key_properties
-        self.end_mid: int | None = None  # next version's mid, exclusive
+        self.end_pos = None
 
 
 class SingerTarget:
@@ -144,8 +153,6 @@ class SingerTarget:
         self.ref_registry = self.config.get("ref_registry")
         reg_path = self.config.get("ref_registry_path")
         if reg_path:
-            from target_parquet_spark.validation import load_ref_registry
-
             loaded = load_ref_registry(reg_path)
             self.ref_registry = {**loaded, **(self.ref_registry or {})}
 
@@ -156,35 +163,52 @@ class SingerTarget:
         return self.run_lines(df)
 
     def run_path(self, path: str) -> dict:
-        return self.run_lines(self.spark.read.text(path))
+        return self.run_lines(with_input_file(self.spark.read.text(path)))
 
     def run_lines(self, lines: DataFrame) -> dict:
-        env = parse_envelope(lines)
-        env.cache()  # envelope is re-filtered per stream-version
-        try:
-            versions = self._collect_schemas(env)
-            self._check_orphan_records(env, versions)
-            state = self._collect_state(env)
-            metrics = self._process_records(env, versions)
-        finally:
-            env.unpersist()
-        self._write_job_metrics(metrics)
+        versions, _, state, metrics = self._ingest(lines)
+        write_json_atomic(
+            os.path.join(self.sink.root, "job_metrics.json"), metrics, indent=2
+        )
         return {
             "state": state,
             "metrics": metrics,
             "paths": {s: self.sink.stream_dir(s) for s in versions},
         }
 
+    def _ingest(self, lines: DataFrame, carried: dict | None = None):
+        """The record pipeline over one input: SCHEMA versions, the orphan
+        check, the last STATE, per-stream widening, then validation and
+        writes.  ``carried`` maps a stream to the (schema, key_properties)
+        that governs its RECORDs before any SCHEMA in ``lines``.  Returns
+        (versions, widened columns per stream, state, metrics)."""
+        env = parse_envelope(lines)
+        env.cache()  # envelope is re-filtered per stream-version
+        try:
+            versions = self._collect_schemas(env, carried)
+            self._check_orphan_records(env, versions)
+            state = self._collect_state(env)
+            widened = {s: self._widen(s, vs) for s, vs in versions.items()}
+            metrics = self._process_records(env, versions, widened)
+        finally:
+            env.unpersist()
+        return versions, widened, state, metrics
+
     # -- driver-side DDL / state --------------------------------------------
 
-    def _collect_schemas(self, env: DataFrame) -> dict[str, list[_StreamVersion]]:
+    def _collect_schemas(
+        self, env: DataFrame, carried: dict | None = None
+    ) -> dict[str, list[_StreamVersion]]:
         rows = (
             env.filter(F.col("msg_type") == "SCHEMA")
-            .select("_mid", "stream", "schema_json", "key_properties")
-            .orderBy("_mid")
+            .select("_pos", "stream", "schema_json", "key_properties")
+            .orderBy("_pos")
             .collect()
         )
-        versions: dict[str, list[_StreamVersion]] = {}
+        versions = {
+            s: [_StreamVersion(None, schema, kp)]
+            for s, (schema, kp) in (carried or {}).items()
+        }
         for r in rows:
             schema = json.loads(r.schema_json) if r.schema_json else {}
             # Contract parity (SDK "invalid schema" standard test): a SCHEMA
@@ -198,10 +222,15 @@ class SingerTarget:
                     f"stream {r.stream!r}: SCHEMA message carries an invalid "
                     f"JSON schema: {r.schema_json[:200]}"
                 )
-            v = _StreamVersion(r["_mid"], schema, list(r.key_properties or []))
+            kp = list(r.key_properties or [])
             prev = versions.setdefault(r.stream, [])
+            if prev and (prev[-1].schema, prev[-1].key_properties) == (schema, kp):
+                # a re-emitted SCHEMA (taps re-send it on reconnect) keeps
+                # the current version instead of opening an identical one
+                continue
+            v = _StreamVersion(r["_pos"], schema, kp)
             if prev:
-                prev[-1].end_mid = v.mid
+                prev[-1].end_pos = v.pos
             prev.append(v)
         return versions
 
@@ -212,17 +241,16 @@ class SingerTarget:
         RECORD whose stream has no SCHEMA yet — either never declared, or
         declared only later in the pipe — fails the run.  The check is one
         executor-side filter + limit(1) over the cached envelope; the
-        per-stream first-SCHEMA position is a tiny driver-built predicate."""
-        cond = F.lit(False)
-        declared = list(versions)
-        if declared:
-            cond = cond | ~F.col("stream").isin(declared)
-        else:
-            cond = F.lit(True)
+        per-stream first-SCHEMA position is a tiny driver-built predicate.
+        A carried version governs from the start, so its stream has no
+        orphans."""
+        cond = ~F.col("stream").isin(list(versions)) if versions else F.lit(True)
         for s, vs in versions.items():
-            cond = cond | (
-                (F.col("stream") == s) & (F.col("_mid") < vs[0].mid)
-            )
+            if vs[0].pos is not None:
+                cond = cond | (
+                    (F.col("stream") == s)
+                    & (F.col("_pos") < position_literal(vs[0].pos))
+                )
         orphan = (
             env.filter((F.col("msg_type") == "RECORD") & cond)
             .select("stream")
@@ -238,8 +266,8 @@ class SingerTarget:
     def _collect_state(self, env: DataFrame):
         rows = (
             env.filter(F.col("msg_type") == "STATE")
-            .select("_mid", "state_json")
-            .orderBy(F.col("_mid").desc())
+            .select("_pos", "state_json")
+            .orderBy(F.col("_pos").desc())
             .limit(1)
             .collect()
         )
@@ -247,36 +275,50 @@ class SingerTarget:
 
     # -- record path ---------------------------------------------------------
 
+    def _fields(
+        self, stream: str, schema: dict, overrides: dict | None = None
+    ) -> list[ResolvedField]:
+        """The stream's resolved columns under ``schema``, with widened
+        ``overrides`` applied."""
+        fixed = (self.config.get("fixed_headers") or {}).get(stream)
+        fields = resolve_schema(schema, fixed_headers=fixed)
+        if overrides:
+            fields = [overrides.get(f.name, f) for f in fields]
+        return fields
+
+    def _widen(
+        self,
+        stream: str,
+        vers: list[_StreamVersion],
+        on_disk: dict | None = None,
+    ) -> dict[str, ResolvedField]:
+        """Mid-stream TYPE changes: parquet mergeSchema cannot reconcile
+        conflicting column types, so conflicting versions widen to a common
+        supertype at write time (schema.widen_versions) — the output
+        directory stays readable, upholding the BUG-2/BUG-4 fix contract.
+        Returns {column: widened field} over the versions, each read with
+        the columns ``on_disk`` already holds widened applied."""
+        if len(vers) < 2:
+            return {}
+        return widen_versions([self._fields(stream, v.schema, on_disk) for v in vers])
+
     def _process_records(
-        self, env: DataFrame, versions: dict[str, list[_StreamVersion]]
+        self,
+        env: DataFrame,
+        versions: dict[str, list[_StreamVersion]],
+        widened: dict[str, dict],
     ) -> dict:
         counts: dict[str, int] = {}
         violations: dict[str, int] = {}
         plans: list[tuple] = []
         for stream, vers in versions.items():
-            # Mid-stream TYPE changes: parquet mergeSchema cannot reconcile
-            # conflicting column types, so conflicting versions widen to a
-            # common supertype at write time (schema.widen_versions) — the
-            # output directory stays readable, upholding the BUG-2/BUG-4
-            # fix contract.  Batch mode sees all versions up front, so the
-            # widening is exact, not heuristic.
-            overrides: dict = {}
-            if len(vers) > 1:
-                fixed = (self.config.get("fixed_headers") or {}).get(stream)
-                overrides = widen_versions(
-                    [
-                        resolve_schema(v.schema, fixed_headers=fixed)
-                        for v in vers
-                    ]
-                )
+            overrides = widened[stream]
             for i, v in enumerate(vers):
-                cond = (
-                    (F.col("msg_type") == "RECORD")
-                    & (F.col("stream") == stream)
-                    & (F.col("_mid") > v.mid)
-                )
-                if v.end_mid is not None:
-                    cond = cond & (F.col("_mid") < v.end_mid)
+                cond = (F.col("msg_type") == "RECORD") & (F.col("stream") == stream)
+                if v.pos is not None:
+                    cond = cond & (F.col("_pos") > position_literal(v.pos))
+                if v.end_pos is not None:
+                    cond = cond & (F.col("_pos") < position_literal(v.end_pos))
                 records = env.filter(cond)
                 if records.isEmpty():
                     continue
@@ -313,10 +355,7 @@ class SingerTarget:
         check_only: bool = False,
         prechecked: bool = False,
     ) -> tuple[int, int]:
-        fixed = (self.config.get("fixed_headers") or {}).get(stream)
-        fields = resolve_schema(v.schema, fixed_headers=fixed)
-        if overrides:
-            fields = [overrides.get(f.name, f) for f in fields]
+        fields = self._fields(stream, v.schema, overrides)
         pred = compile_predicate(
             v.schema,
             source_col="_rec",
@@ -401,10 +440,3 @@ class SingerTarget:
             return int(got["n"]), int(got["invalid"] or 0) + n_quarantined
         # exact path: count the (cached) envelope subset for this version
         return records.count() - n_quarantined, n_quarantined
-
-    # -- metrics -------------------------------------------------------------
-
-    def _write_job_metrics(self, metrics: dict) -> None:
-        path = os.path.join(self.sink.root, "job_metrics.json")
-        with open(path, "w") as fh:
-            json.dump(metrics, fh, indent=2)
