@@ -2347,8 +2347,9 @@ def dedup_exact_normalized(spark, sf_dir):
     # instead of three times.  A mat() of h was also tried: wash across
     # three A/B windows (-10/+1/-5%) — a corpus-sized cut with no clear
     # win stays out per lineage.py's posture.
+    # coalesce: sum over no groups is NULL, the oracle's count(*) is 0
     raw_stats = h.groupBy("h_raw").count().agg(
-        F.sum("count").cast("long").alias("n_docs"),
+        F.coalesce(F.sum("count"), F.lit(0)).cast("long").alias("n_docs"),
         F.count_if(F.col("count") > 1).cast("long").alias("n_raw_dup_groups"),
     )
     norm_g = h.groupBy("h_norm").count().filter(F.col("count") > 1)

@@ -9,8 +9,9 @@ batch buffer; singer-sdk drain loop).  The Spark-native shape:
   any line-oriented streaming source — Kafka, socket — plugs in the same).
 - ``foreachBatch``: each micro-batch IS the reference's batch buffer (B1),
   and runs the batch target's record pipeline (target.py) on it: SCHEMA
-  versions routed by arrival position, the orphan check, the last STATE,
-  decode, validation and parquet append.
+  versions routed by arrival position, one aggregate for the orphan
+  check, the last STATE and every per-version check, then decode and
+  parquet append.
 - the checkpoint directory is Spark's commit log == Singer STATE (S4): on
   restart, already-committed files are not re-ingested.  The latest STATE
   message seen is additionally written to ``state.json`` per epoch so a
@@ -76,6 +77,9 @@ class SingerStreamTarget(SingerTarget):
         if os.path.isfile(self._sidecar("_schema_registry.json")):
             with open(self._sidecar("_schema_registry.json")) as fh:
                 self._registry = json.load(fh)
+        # stream -> {column: widened field} to rewrite on disk before the
+        # current batch writes
+        self._rewrites: dict[str, dict] = {}
         # Running totals across relaunches — committed batches are not
         # replayed, so starting from zero would lose prior counts.
         self._metrics: dict[str, int] = {}
@@ -112,6 +116,7 @@ class SingerStreamTarget(SingerTarget):
         carried = {
             s: (e["schema"], e["key_properties"]) for s, e in self._registry.items()
         }
+        self._rewrites = {}
         versions, widened, state, metrics = self._ingest(batch_df, carried)
 
         registry = {
@@ -146,7 +151,7 @@ class SingerStreamTarget(SingerTarget):
         """Widening only grows across batches: a column an earlier batch
         widened stays widened for every later version.  A column this
         batch newly widens is rewritten in the history already on disk
-        before the batch writes, because a stream cannot see future
+        (see ``_write_versions``), because a stream cannot see future
         versions up front the way a batch run does."""
         on_disk = {
             n: ResolvedField(n, t, fmt, True)
@@ -169,8 +174,15 @@ class SingerStreamTarget(SingerTarget):
                 if n in written and written[n] != f.spark_type
             }
             if need:
-                self._rewrite_widened(stream, need)
+                self._rewrites[stream] = need
         return {**on_disk, **fresh}
+
+    def _write_versions(self, *args) -> dict:
+        """History on disk is rewritten once every check of the batch has
+        passed, and before the batch appends to it."""
+        for stream, need in self._rewrites.items():
+            self._rewrite_widened(stream, need)
+        return super()._write_versions(*args)
 
     def _rewrite_widened(self, stream: str, fresh: dict) -> None:
         """One-time type-widening compaction of a stream's existing output:

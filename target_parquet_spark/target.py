@@ -6,23 +6,34 @@ Spark's execution model:
 
 - ONE text scan; envelope parse and RECORD decoding/coercion are Catalyst
   plans that run on executors (S1/S3).
-- SCHEMA and STATE messages (rare, tiny) are collected to the driver —
-  stream DDL is driver-side by nature (S2/S4).
-- Per stream × schema-version, records are routed by arrival order
-  (``_pos`` ranges: input file, then line), decoded, validated and
-  appended to the stream's parquet directory (B1/B2/W1-W4; BUG-4 fixed by
-  version-append + mergeSchema read).
-- Job metrics are observed on the write itself (``df.observe``) and
-  ``job_metrics.json`` is written ONCE per run — the reference rewrote it
-  per record, an O(n²) anti-pattern called out in SURVEY §4 (reference
+- SCHEMA messages (rare, tiny) are collected to the driver — stream DDL is
+  driver-side by nature (S2).
+- Each RECORD is routed to the stream × schema-version that governs it:
+  the latest SCHEMA of its stream before it in arrival order (``_pos``:
+  input file, then line).  A RECORD with no such SCHEMA is an orphan.
+- ONE aggregate over the cached envelope answers every question asked
+  before writing: per version the record count, the invalid count and the
+  null counts of key (and, in strict mode, non-nullable) columns; the
+  orphan count; the last STATE (S4).  Every check fails the run from that
+  row, before anything is written.
+- Each non-empty version is then decoded and appended to its stream's
+  parquet directory (B1/B2/W1-W4; BUG-4 fixed by version-append +
+  mergeSchema read).  ``job_metrics.json`` takes its counts from the
+  aggregate and is written ONCE per run — the reference rewrote it per
+  record, an O(n²) anti-pattern called out in SURVEY §4 (reference
   writers.py:52-74).
 
-Validation (V1-V4): the compiled predicate runs JVM-side.  Lenient
-(default): invalid records pass through and the violation count lands in
-metrics (the reference silently passes the raw record, sinks.py:136-139).
-Strict: any invalid record fails the run *before* anything is written.
-BUG-2 fix: nulls in non-nullable columns are counted the same way — strict
-rejects, lenient writes a readable file with nulls.
+So a run is a fixed number of Spark jobs: the SCHEMA collect, the
+aggregate, and one write per non-empty version (plus one quarantine write
+per version with invalid records).
+
+Validation (V1-V4): the compiled predicate runs JVM-side, in the
+aggregate.  Lenient (default): invalid records are written and counted in
+``validationViolations`` (the reference silently passes the raw record,
+sinks.py:136-139), or rerouted when ``quarantine_path`` is set.  Strict:
+any invalid record fails the run.  BUG-2 fix: nulls in non-nullable
+columns are counted the same way — strict rejects, lenient writes a
+readable file with nulls.
 
 This is the one record pipeline: ``SingerTarget.run_lines`` runs it over a
 whole input, and the streaming target (streaming/singer_stream.py) runs it
@@ -35,7 +46,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from target_parquet_spark.io.parquet_sink import ParquetStreamSink, write_json_atomic
@@ -71,48 +82,17 @@ def enforce_undeclared_keys(stream, fields, key_properties) -> None:
         )
 
 
-def enforce_keys_present(stream, parsed, fields, key_properties) -> None:
-    """Contract parity (SDK "record missing key property" standard test):
-    every declared key property must be present and non-null in every
-    record, regardless of validation mode — key integrity is a structural
-    guarantee, not a JSON-schema keyword.  One column-null count over the
-    already-parsed batch, failing BEFORE anything is written."""
-    key_cols = [f.name for f in fields if f.name in set(key_properties)]
-    if not key_cols:
-        return
-    row = parsed.agg(
-        *[
-            F.sum(
-                F.when(F.col(f"_rec.`{c}`").isNull(), 1).otherwise(0)
-            ).alias(c)
-            for c in key_cols
-        ]
-    ).collect()[0]
-    missing = sorted(c for c in key_cols if row[c])
-    if missing:
-        raise SingerValidationError(
-            f"stream {stream!r}: record(s) missing key_properties "
-            f"{missing}"
-        )
-
-
 def quarantine_invalid(parsed, pred, stream, quarantine_root):
     """Reroute invalid records to <quarantine_root>/<stream>/ as JSON
     lines carrying the raw Singer record text (re-playable: wrap each
-    line back into a RECORD message once the tap is fixed); the caller's
-    main sink receives only valid rows.  Counts first and writes only
-    when something failed: an unconditional write job would litter an
-    empty directory per clean stream-version (which replay tooling would
-    then pick up) and pay a write job for nothing.  Returns
-    (valid_parsed, n_quarantined)."""
-    bad = parsed.filter(~pred).select(
+    line back into a RECORD message once the tap is fixed).  Called only
+    for a version with invalid records: an unconditional write would
+    litter an empty directory per clean stream-version (which replay
+    tooling would then pick up).  Returns the rest, for the main sink."""
+    parsed.filter(~pred).select(
         F.lit(stream).alias("stream"), "record_json"
-    )
-    n_quarantined = bad.count()
-    if n_quarantined:
-        bad.write.mode("append").json(os.path.join(quarantine_root, stream))
-        parsed = parsed.filter(pred)
-    return parsed, n_quarantined
+    ).write.mode("append").json(os.path.join(quarantine_root, stream))
+    return parsed.filter(F.coalesce(pred, F.lit(True)))
 
 
 class _StreamVersion:
@@ -126,6 +106,23 @@ class _StreamVersion:
         self.schema = schema
         self.key_properties = key_properties
         self.end_pos = None
+
+
+def _route(plans: list[tuple]) -> Column:
+    """Each RECORD's index into ``plans``: the version of its stream whose
+    ``_pos`` range holds it.  Null for any other message and for an
+    orphan RECORD.  This is the only statement of the routing rule."""
+    vidx = None
+    for i, (stream, v, _, _) in enumerate(plans):
+        cond = F.col("stream") == stream
+        if v.pos is not None:
+            cond = cond & (F.col("_pos") > position_literal(v.pos))
+        if v.end_pos is not None:
+            cond = cond & (F.col("_pos") < position_literal(v.end_pos))
+        vidx = F.when(cond, i) if vidx is None else vidx.when(cond, i)
+    if vidx is None:
+        return F.lit(None).cast("int")
+    return F.when(F.col("msg_type") == "RECORD", vidx)
 
 
 class SingerTarget:
@@ -177,24 +174,39 @@ class SingerTarget:
         }
 
     def _ingest(self, lines: DataFrame, carried: dict | None = None):
-        """The record pipeline over one input: SCHEMA versions, the orphan
-        check, the last STATE, per-stream widening, then validation and
-        writes.  ``carried`` maps a stream to the (schema, key_properties)
-        that governs its RECORDs before any SCHEMA in ``lines``.  Returns
+        """The record pipeline over one input: SCHEMA versions, per-stream
+        widening, the pre-write aggregate and its checks, then the writes.
+        ``carried`` maps a stream to the (schema, key_properties) that
+        governs its RECORDs before any SCHEMA in ``lines``.  Returns
         (versions, widened columns per stream, state, metrics)."""
         env = parse_envelope(lines)
-        env.cache()  # envelope is re-filtered per stream-version
+        env.cache()  # scanned by the SCHEMA collect, the aggregate and each write
         try:
             versions = self._collect_schemas(env, carried)
-            self._check_orphan_records(env, versions)
-            state = self._collect_state(env)
             widened = {s: self._widen(s, vs) for s, vs in versions.items()}
-            metrics = self._process_records(env, versions, widened)
+            plans = []  # (stream, version, fields, predicate), indexed by _vidx
+            for stream, vers in versions.items():
+                for v in vers:
+                    fields = self._fields(stream, v.schema, widened[stream])
+                    pred = compile_predicate(
+                        v.schema,
+                        source_col=f"_rec{len(plans)}",
+                        raw_json_col="record_json",
+                        declared_cols=[f.name for f in fields],
+                        ref_base_dir=self.ref_base_dir,
+                        ref_registry=self.ref_registry,
+                    )
+                    plans.append((stream, v, fields, pred))
+            routed = env.withColumn("_vidx", _route(plans))
+            got = self._aggregate(routed, plans)
+            self._check(plans, got)
+            state = json.loads(got["state"]) if got["state"] else None
+            metrics = self._write_versions(routed, plans, got)
         finally:
             env.unpersist()
         return versions, widened, state, metrics
 
-    # -- driver-side DDL / state --------------------------------------------
+    # -- driver-side DDL -----------------------------------------------------
 
     def _collect_schemas(
         self, env: DataFrame, carried: dict | None = None
@@ -202,9 +214,9 @@ class SingerTarget:
         rows = (
             env.filter(F.col("msg_type") == "SCHEMA")
             .select("_pos", "stream", "schema_json", "key_properties")
-            .orderBy("_pos")
             .collect()
         )
+        rows.sort(key=lambda r: tuple(r["_pos"]))  # a struct sorts field by field
         versions = {
             s: [_StreamVersion(None, schema, kp)]
             for s, (schema, kp) in (carried or {}).items()
@@ -233,45 +245,6 @@ class SingerTarget:
                 prev[-1].end_pos = v.pos
             prev.append(v)
         return versions
-
-    def _check_orphan_records(
-        self, env: DataFrame, versions: dict[str, list[_StreamVersion]]
-    ) -> None:
-        """Contract parity (SDK "record before schema" standard test): a
-        RECORD whose stream has no SCHEMA yet — either never declared, or
-        declared only later in the pipe — fails the run.  The check is one
-        executor-side filter + limit(1) over the cached envelope; the
-        per-stream first-SCHEMA position is a tiny driver-built predicate.
-        A carried version governs from the start, so its stream has no
-        orphans."""
-        cond = ~F.col("stream").isin(list(versions)) if versions else F.lit(True)
-        for s, vs in versions.items():
-            if vs[0].pos is not None:
-                cond = cond | (
-                    (F.col("stream") == s)
-                    & (F.col("_pos") < position_literal(vs[0].pos))
-                )
-        orphan = (
-            env.filter((F.col("msg_type") == "RECORD") & cond)
-            .select("stream")
-            .limit(1)
-            .collect()
-        )
-        if orphan:
-            raise SingerValidationError(
-                f"RECORD for stream {orphan[0].stream!r} arrived before its "
-                "SCHEMA message"
-            )
-
-    def _collect_state(self, env: DataFrame):
-        rows = (
-            env.filter(F.col("msg_type") == "STATE")
-            .select("_pos", "state_json")
-            .orderBy(F.col("_pos").desc())
-            .limit(1)
-            .collect()
-        )
-        return json.loads(rows[0].state_json) if rows and rows[0].state_json else None
 
     # -- record path ---------------------------------------------------------
 
@@ -302,141 +275,122 @@ class SingerTarget:
             return {}
         return widen_versions([self._fields(stream, v.schema, on_disk) for v in vers])
 
-    def _process_records(
-        self,
-        env: DataFrame,
-        versions: dict[str, list[_StreamVersion]],
-        widened: dict[str, dict],
+    def _aggregate(self, routed: DataFrame, plans: list[tuple]) -> dict:
+        """The one pre-write aggregate's single row, keyed: ``("n", i)`` records of
+        version ``i``, ``("invalid", i)`` of them failing its predicate,
+        ``("null", i, column)`` nulls in a key (strict: also non-nullable)
+        column; ``orphans`` and the first orphan's ``orphan_stream``;
+        ``state``, the last STATE's JSON.  Each RECORD is parsed once,
+        under its own version's struct."""
+        vidx = F.col("_vidx")
+        orphan = (F.col("msg_type") == "RECORD") & vidx.isNull()
+        aggs = {
+            "orphans": F.count(F.when(orphan, 1)),
+            "orphan_stream": F.min_by("stream", F.when(orphan, F.col("_pos"))),
+            "state": F.max_by(
+                "state_json", F.when(F.col("msg_type") == "STATE", F.col("_pos"))
+            ),
+        }
+        parsed = []
+        for i, (_, v, fields, pred) in enumerate(plans):
+            mine = vidx == i
+            aggs[("n", i)] = F.count(F.when(mine, 1))
+            if not fields:
+                continue
+            rec = f"_rec{i}"
+            parsed.append(
+                F.when(
+                    mine, F.from_json(F.col("record_json"), raw_record_struct(fields))
+                ).alias(rec)
+            )
+            aggs[("invalid", i)] = F.count(F.when(mine & ~pred, 1))
+            for f in fields:
+                if f.name in v.key_properties or (self.strict and not f.nullable):
+                    aggs[("null", i, f.name)] = F.count(
+                        F.when(mine & F.col(f"{rec}.`{f.name}`").isNull(), 1)
+                    )
+        row = (
+            routed.select("*", *parsed)
+            .agg(*[a.alias(f"_a{j}") for j, a in enumerate(aggs.values())])
+            .collect()[0]
+        )
+        return dict(zip(aggs, row))
+
+    def _check(self, plans: list[tuple], got: dict) -> None:
+        """Every structural and validation failure, raised before any
+        write: a run never leaves half-written output that a retry would
+        re-append into."""
+        if got["orphans"]:
+            # Contract parity (SDK "record before schema" standard test): a
+            # RECORD whose stream has no SCHEMA yet — never declared, or
+            # declared only later in the pipe — fails the run.
+            raise SingerValidationError(
+                f"RECORD for stream {got['orphan_stream']!r} arrived before its "
+                "SCHEMA message"
+            )
+        for i, (stream, v, fields, _) in enumerate(plans):
+            if not got[("n", i)]:
+                continue
+            enforce_undeclared_keys(stream, fields, v.key_properties)
+            # Contract parity (SDK "record missing key property" standard
+            # test): every declared key property is present and non-null in
+            # every record, in either validation mode — key integrity is a
+            # structural guarantee, not a JSON-schema keyword.
+            missing = sorted(
+                f.name
+                for f in fields
+                if f.name in v.key_properties and got[("null", i, f.name)]
+            )
+            if missing:
+                raise SingerValidationError(
+                    f"stream {stream!r}: record(s) missing key_properties "
+                    f"{missing}"
+                )
+            if not self.strict:
+                continue
+            # reference raises at _validate_and_parse
+            bad = got.get(("invalid", i))
+            if bad:
+                raise SingerValidationError(
+                    f"stream {stream!r}: {bad} record(s) failed schema validation"
+                )
+            for f in fields:
+                if not f.nullable and got[("null", i, f.name)]:
+                    raise SingerValidationError(
+                        f"stream {stream!r}: null in non-nullable column {f.name!r}"
+                    )
+
+    def _write_versions(
+        self, routed: DataFrame, plans: list[tuple], got: dict
     ) -> dict:
+        """One append per non-empty version; counts come from the
+        aggregate.  A version with zero resolvable columns (SDK "schema
+        with no properties" standard test) is counted without writing a
+        zero-column parquet file.  With ``quarantine_path`` (lenient mode
+        only — strict already failed), invalid records are REROUTED there
+        and the main sink receives only valid rows: the badRecordsPath
+        pattern SURVEY V4 sketches.  Without it, lenient keeps the
+        reference's pass-through (reference sinks.py:136-139)."""
         counts: dict[str, int] = {}
         violations: dict[str, int] = {}
-        plans: list[tuple] = []
-        for stream, vers in versions.items():
-            overrides = widened[stream]
-            for i, v in enumerate(vers):
-                cond = (F.col("msg_type") == "RECORD") & (F.col("stream") == stream)
-                if v.pos is not None:
-                    cond = cond & (F.col("_pos") > position_literal(v.pos))
-                if v.end_pos is not None:
-                    cond = cond & (F.col("_pos") < position_literal(v.end_pos))
-                records = env.filter(cond)
-                if records.isEmpty():
-                    continue
-                plans.append((stream, v, records, i, overrides))
-        if self.strict:
-            # Strict's contract is "any invalid record fails the run
-            # BEFORE anything is written" — across the WHOLE run, not per
-            # stream-version: writing stream A before discovering stream
-            # B's bad record would leave half-written output a retry
-            # re-appends into.  So validate every version first (the
-            # envelope is cached; these are the same aggs the write pass
-            # would run), then write.
-            for stream, v, records, i, overrides in plans:
-                self._write_version(
-                    stream, v, records, version_idx=i,
-                    overrides=overrides, check_only=True,
+        quarantine_root = None if self.strict else self.config.get("quarantine_path")
+        for i, (stream, v, fields, pred) in enumerate(plans):
+            n, bad = got[("n", i)], got.get(("invalid", i), 0)
+            if not n:
+                continue
+            if fields:
+                records = routed.filter(F.col("_vidx") == i)
+                if quarantine_root and bad:
+                    parsed = records.withColumn(
+                        f"_rec{i}",
+                        F.from_json(F.col("record_json"), raw_record_struct(fields)),
+                    )
+                    records = quarantine_invalid(parsed, pred, stream, quarantine_root)
+                    n -= bad
+                decode = decode_records_exact if self.exact else decode_records_jvm
+                self.sink.write(
+                    stream, decode(records, fields), key_properties=v.key_properties
                 )
-        for stream, v, records, i, overrides in plans:
-            n, bad = self._write_version(
-                stream, v, records, version_idx=i,
-                overrides=overrides, prechecked=self.strict,
-            )
             counts[stream] = counts.get(stream, 0) + n
             violations[stream] = violations.get(stream, 0) + bad
         return {"recordCount": counts, "validationViolations": violations}
-
-    def _write_version(
-        self,
-        stream: str,
-        v: _StreamVersion,
-        records: DataFrame,
-        version_idx: int,
-        overrides: dict | None = None,
-        check_only: bool = False,
-        prechecked: bool = False,
-    ) -> tuple[int, int]:
-        fields = self._fields(stream, v.schema, overrides)
-        pred = compile_predicate(
-            v.schema,
-            source_col="_rec",
-            raw_json_col="record_json",
-            declared_cols=[f.name for f in fields],
-            ref_base_dir=self.ref_base_dir,
-            ref_registry=self.ref_registry,
-        )
-        non_nullable = [f.name for f in fields if not f.nullable]
-
-        enforce_undeclared_keys(stream, fields, v.key_properties)
-
-        if not fields:
-            # SDK "schema with no properties" standard test: a declared
-            # stream with zero resolvable columns is processed (counted)
-            # without writing a zero-column parquet file.
-            if check_only:
-                return 0, 0
-            return records.count(), 0
-
-        parsed = records.withColumn(
-            "_rec", F.from_json(F.col("record_json"), raw_record_struct(fields))
-        )
-
-        if not prechecked:
-            enforce_keys_present(stream, parsed, fields, v.key_properties)
-
-        if self.strict and not prechecked:
-            # Fail BEFORE writing (reference raises at _validate_and_parse).
-            bad_pred = F.sum(F.when(~pred, 1).otherwise(0)).alias("bad")
-            bad_null = [
-                F.sum(
-                    F.when(F.col(f"_rec.`{c}`").isNull(), 1).otherwise(0)
-                ).alias(f"null_{c}")
-                for c in non_nullable
-            ]
-            row = parsed.agg(bad_pred, *bad_null).collect()[0]
-            if row["bad"]:
-                raise SingerValidationError(
-                    f"stream {stream!r}: {row['bad']} record(s) failed schema validation"
-                )
-            for c in non_nullable:
-                if row[f"null_{c}"]:
-                    raise SingerValidationError(
-                        f"stream {stream!r}: null in non-nullable column {c!r}"
-                    )
-
-        if check_only:
-            return 0, 0
-
-        # Quarantine (lenient mode only — strict already failed above):
-        # when ``quarantine_path`` is configured, invalid records are
-        # REROUTED to <quarantine_path>/<stream>/ as JSON lines carrying
-        # the raw Singer record text (re-playable: wrap each line back
-        # into a RECORD message once the tap is fixed) and the main sink
-        # receives only valid rows.  This is the badRecordsPath pattern SURVEY V4 sketches;
-        # without the option, lenient keeps the reference's pass-through
-        # (reference sinks.py:136-139).  One extra filtered write off the
-        # same cached envelope; the quarantine count rides an Observation
-        # on that write, no extra scan.
-        quarantine_root = self.config.get("quarantine_path")
-        n_quarantined = 0
-        if quarantine_root and not self.strict:
-            parsed, n_quarantined = quarantine_invalid(
-                parsed, pred, stream, quarantine_root
-            )
-
-        if self.exact:
-            typed = decode_records_exact(parsed, fields)
-            obs = None
-        else:
-            obs = Observation(f"{stream}-v{version_idx}")
-            indicators = [F.count(F.lit(1)).alias("n")]
-            indicators.append(F.sum(F.when(~pred, 1).otherwise(0)).alias("invalid"))
-            parsed = parsed.observe(obs, *indicators)
-            typed = decode_records_jvm(parsed, fields)
-
-        self.sink.write(stream, typed, key_properties=v.key_properties)
-
-        if obs is not None:
-            got = obs.get
-            return int(got["n"]), int(got["invalid"] or 0) + n_quarantined
-        # exact path: count the (cached) envelope subset for this version
-        return records.count() - n_quarantined, n_quarantined

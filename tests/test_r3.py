@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import target_parquet_spark.queries_r3  # noqa: F401  (registers queries)
-from target_parquet_spark.queries import QUERIES
+from target_parquet_spark.queries import ORACLES, QUERIES
 from target_parquet_spark.queries_r3 import _CHUNK, _MIX, _STRIDE
 
 
@@ -510,6 +510,20 @@ def test_normalized_dedup_recovers_case_pairs(run, spark, sf_dir):
     assert r.n_norm_dup_groups >= r.n_raw_dup_groups
     # every original/uppercased pair collides under the normalized hash
     assert r.n_norm_dup_groups > 0
+
+
+def test_normalized_dedup_empty_corpus_matches_oracle(spark, sf_dir, tmp_path):
+    """On an empty corpus every count is 0, as in the DuckDB oracle (a sum
+    over no groups is NULL)."""
+    import duckdb
+
+    empty = str(tmp_path / "documents.parquet")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0).write.parquet(empty)
+    got = [tuple(r) for r in QUERIES["dedup_exact_normalized"](spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{empty}/*.parquet')")
+    want = con.execute(ORACLES["dedup_exact_normalized"]).fetchall()
+    assert got == want == [(0, 0, 0)]
 
 
 def test_conversion_latency_consistent(run):

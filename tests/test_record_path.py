@@ -8,14 +8,16 @@ from __future__ import annotations
 import io
 import json
 import os
+import re
 import sys
 import tempfile
 import time
+import uuid
 
 import pytest
 
 from target_parquet_spark.__main__ import main
-from target_parquet_spark.io.parquet_sink import read_stream_output
+from target_parquet_spark.io.parquet_sink import ParquetStreamSink, read_stream_output
 from target_parquet_spark.streaming import SingerStreamTarget
 from target_parquet_spark.target import SingerTarget, SingerValidationError
 
@@ -214,3 +216,132 @@ def test_cli_stdin_spool_is_removed(spark, tmp_path, monkeypatch, capsys):
     assert main(["--config", str(cfg)]) == 0
     assert json.loads(capsys.readouterr().out) == {"pos": 1}
     assert list(spool.glob("*.jsonl")) == []
+
+
+@pytest.mark.parametrize(
+    "later, error",
+    [
+        (
+            ("pk", {"id": {"type": ["integer", "null"]}}, {"id": None}),
+            "missing key_properties ['id']",
+        ),
+        (
+            ("pk", {"v": {"type": ["integer", "null"]}}, {"v": 1}),
+            "key_properties ['id'] are not declared",
+        ),
+    ],
+    ids=["null_key", "undeclared_key"],
+)
+def test_lenient_structural_failure_writes_nothing(spark, tmp_path, later, error):
+    """A key failure on a later stream fails the run before the earlier,
+    valid stream ``s`` is written: no half-written output for a retry to
+    re-append into."""
+    stream, props, record = later
+    lines = [
+        _msg(type="SCHEMA", stream="s", schema=_schema({"id": {"type": ["integer", "null"]}}),
+             key_properties=["id"]),
+        _msg(type="RECORD", stream="s", record={"id": 1}),
+        _msg(type="SCHEMA", stream=stream, schema=_schema(props), key_properties=["id"]),
+        _msg(type="RECORD", stream=stream, record=record),
+        _msg(type="STATE", value={"pos": 1}),
+    ]
+    got = _run_both(spark, tmp_path, {"f1.jsonl": (lines, 0)})
+    for side in ("batch", "stream"):
+        err, state, (rows, metrics) = got[side]
+        assert error in str(err), side
+        assert (state, rows, metrics) == (None, [], None), side
+
+
+def test_stream_check_failure_leaves_history_unwidened(spark, tmp_path):
+    """A micro-batch that widens a column but then fails a check does not
+    rewrite the stream's history on disk: the rewrite waits for the
+    checks."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    out = tmp_path / "out"
+
+    def drop(name, props, record):
+        lines = [
+            _msg(type="SCHEMA", stream="s", schema=_schema(props), key_properties=["id"]),
+            _msg(type="RECORD", stream="s", record=record),
+        ]
+        (inbox / name).write_text("\n".join(lines) + "\n")
+
+    key = {"id": {"type": ["integer", "null"]}}
+    drop("f1.jsonl", {**key, "n": {"type": ["integer", "null"]}}, {"id": 1, "n": 1})
+    assert _run_stream(spark, inbox, out, {})[0] is None
+    drop("f2.jsonl", {**key, "n": {"type": ["number", "null"]}}, {"id": None, "n": 1.5})
+    err = _run_stream(spark, inbox, out, {})[0]
+    assert "missing key_properties ['id']" in str(err)
+    written = spark.read.parquet(str(out / "s")).schema["n"].dataType
+    assert written.simpleString() == "bigint"
+
+
+@pytest.mark.parametrize("config", [{}, {"exact_compat": True}], ids=["jvm", "exact"])
+def test_validation_violations_counted_on_every_decode_path(spark, tmp_path, config):
+    """Lenient mode writes invalid records and counts them, whichever
+    decode path writes them."""
+    schema = _schema({"id": {"type": ["integer", "null"]}, "v": {"type": ["number", "null"], "minimum": 0}})
+    lines = [_msg(type="SCHEMA", stream="s", schema=schema, key_properties=["id"])]
+    lines += [_msg(type="RECORD", stream="s", record={"id": i, "v": i - 2}) for i in range(4)]
+    got = _run_both(spark, tmp_path, {"f1.jsonl": (lines, 0)}, config)
+    assert got["stream"] == got["batch"]
+    err, _, (rows, metrics) = got["batch"]
+    assert err is None and len(rows) == 4
+    assert metrics == {"recordCount": {"s": 4}, "validationViolations": {"s": 2}}
+
+
+def _three_streams_one_redeclared():
+    """3 streams; ``b`` is re-declared with a different schema halfway, so
+    4 versions, each with records."""
+    def schema(extra):
+        return _schema({"id": {"type": ["integer"]}, extra: {"type": ["string", "null"]}})
+
+    lines = [
+        _msg(type="SCHEMA", stream=s, schema=schema("x"), key_properties=["id"]) for s in "abc"
+    ]
+    for i in range(20):
+        if i == 10:
+            lines.append(_msg(type="SCHEMA", stream="b", schema=schema("y"), key_properties=["id"]))
+        lines += [
+            _msg(type="RECORD", stream=s, record={"id": i, "x": "p", "y": "q"}) for s in "abc"
+        ]
+    lines.append(_msg(type="STATE", value={"pos": 20}))
+    return lines
+
+
+def test_ingest_runs_a_fixed_number_of_spark_jobs(spark, tmp_path):
+    """One SCHEMA collect and one aggregate before the writes, whatever
+    the number of versions: at most 3 jobs (the aggregate may run as two
+    under adaptive execution) plus one write per version."""
+    sc = spark.sparkContext
+    group = f"ingest-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        res = SingerTarget(
+            spark, {"filepath": str(tmp_path), "file_naming_scheme": "{stream}"}
+        ).run_strings(_three_streams_one_redeclared())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["metrics"]["recordCount"] == {"a": 20, "b": 20, "c": 20}
+    versions_written = 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3 + versions_written
+
+
+def test_write_plan_parses_record_json_once(spark, tmp_path, monkeypatch):
+    """The default write decodes each RECORD with one ``from_json``: the
+    checks ran in the aggregate, so the write carries no second parse."""
+    plans = []
+    real_write = ParquetStreamSink.write
+
+    def capture(self, stream, df, key_properties=None):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real_write(self, stream, df, key_properties)
+
+    monkeypatch.setattr(ParquetStreamSink, "write", capture)
+    SingerTarget(
+        spark, {"filepath": str(tmp_path), "file_naming_scheme": "{stream}"}
+    ).run_strings(_three_streams_one_redeclared())
+    parse = re.compile(r"from_json\((?:StructField\([^()]*\), )+record_json#\d+")
+    assert len(plans) == 4
+    assert [len(parse.findall(p)) for p in plans] == [1] * 4
