@@ -19,7 +19,9 @@ same resolution as the schema path, fixing reference BUG-3):
 - C4  number: ``try_cast(double)``  (reference float(), sinks.py:90-91;
       unparseable values become null instead of crashing the pipe).
 - C5  integer: ``try_cast(long)``  (reference int(), sinks.py:93-94).
-- C6/C11 date-time: lenient multi-format parse, malformed -> NULL
+- C6/C11 date-time: one dateutil-grade grammar (``lenient_timestamp``: a
+      zone-abbreviation lookup, the ISO cast, then six optional-section
+      patterns over a once-cleaned string), malformed -> NULL
       (``datetime_error_treatment = NULL``, reference sinks.py:141-143,
       177-208), truncated to millisecond precision to match the reference's
       ``pa.timestamp("ms")`` sink type (reference sinks.py:40-41).
@@ -45,114 +47,12 @@ from target_parquet_spark.schema import ResolvedField
 
 __all__ = ["coerce_expr", "coerce_columns", "lenient_timestamp"]
 
-# Fallback patterns tried after Spark's ISO-8601 cast, approximating
-# dateutil-grade leniency (reference uses dateutil.parser, sinks.py:96-101).
-# Ordering mirrors dateutil's month-first-then-day-first resolution: the
-# M/d form is tried before d/M, so "01/02/2024" is Jan 2 (dateutil default)
-# while "15/01/2024" falls through M/d (month 15 -> null under try_) into
-# d/M and still parses — exactly dateutil's fallback behavior.  Extended in
-# r3 (VERDICT #9) from the dateutil spellings exercised by the reference's
-# parse path (reference sinks.py:96-101, 197); the corpus is pinned
-# against python-dateutil itself in tests/test_r3_hardening.py.
-_TS_FORMATS = [
-    "M/d/yyyy H:m:s",
-    "M/d/yyyy",
-    "d/M/yyyy H:m:s",
-    "d/M/yyyy",
-    "M-d-yyyy H:m:s",
-    "M-d-yyyy",
-    "d-M-yyyy H:m:s",
-    "d-M-yyyy",
-    "yyyy/M/d H:m:s",
-    "yyyy/M/d",
-    "yyyy.M.d H:m:s",
-    "yyyy.M.d",
-    "yyyyMMdd'T'HHmmss",
-    "yyyyMMdd",
-    "MMM d yyyy H:m:s",
-    "MMM d yyyy",
-    "d MMM yyyy H:m:s",
-    "d MMM yyyy",
-    "d MMMM yyyy H:m:s",
-    "d MMMM yyyy",
-    "d-MMM-yyyy H:m:s",
-    "d-MMM-yyyy",
-    # r5 (VERDICT r4 #9): remaining dateutil spellings — bare month-name
-    # dates, 12-hour AM/PM clocks, and named-zone suffixes (UTC/GMT, which
-    # dateutil resolves itself; other abbreviations need a tzinfos map in
-    # dateutil too, so they are out of scope on both engines).
-    # r6: the comma-variant formats are GONE — commas are normalized away
-    # in the cleaning pass (dateutil ignores them wherever they appear),
-    # so only comma-less patterns can ever match the cleaned string.
-    "MMMM d yyyy H:m:s",
-    "MMMM d yyyy",
-    "M/d/yyyy h:m:s a",
-    "M/d/yyyy h:m a",
-    "MMM d yyyy h:m:s a",
-    "MMM d yyyy h:m a",
-    "MMMM d yyyy h:m:s a",
-    "MMMM d yyyy h:m a",
-    "d MMM yyyy h:m:s a",
-    "d MMM yyyy h:m a",
-    "d MMMM yyyy h:m:s a",
-    "d MMMM yyyy h:m a",
-    "yyyy-MM-dd h:m:s a",
-    "yyyy-MM-dd h:m a",
-    # r6: hour-only meridiem clocks ("June 3 2021 4pm" — the cleaning
-    # pass separates an attached am/pm from its digit first)
-    "M/d/yyyy h a",
-    "MMM d yyyy h a",
-    "MMMM d yyyy h a",
-    "d MMM yyyy h a",
-    "d MMMM yyyy h a",
-    "yyyy-MM-dd h a",
-]
-
-# Formats evaluated against the TZ-SUBSTITUTED string (see
-# lenient_timestamp): the XXX-offset variants fed by the tzinfos map
-# (r7, VERDICT r6 #6 — a trailing mapped abbreviation becomes "+HH:MM"
-# in the cleaning pass; dateutil needs the same literal map via its
-# tzinfos= argument, which is the parity contract), PLUS the zzz
-# zone-name formats (UTC/GMT).  The zzz formats MUST run on the
-# substituted string and AFTER the XXX ones: java.time's zone-text
-# parser resolves bare abbreviations like CST to DST-observing REGION
-# zones (America/Chicago — summer dates come back -05:00 where the
-# contract says -06:00), so mapped abbreviations have to be replaced
-# by their fixed offsets before any zzz attempt can see them (review
-# r7 finding #1).  Two lists so the split is structural, not a counted
-# slice (finding #4).
-_TZ_TS_FORMATS = [
-    "yyyy-MM-dd H:m:s XXX",
-    "yyyy-MM-dd'T'H:m:s XXX",
-    # ADVICE r7: fractional-second shapes.  Without them the abbrev
-    # gate (which suppresses the ISO cast for any mapped trailing
-    # abbreviation) nulled strings like "2024-01-15 10:30:00.123 EST"
-    # that the plain cast used to parse (correctly only in winter).
-    "yyyy-MM-dd H:m:s.SSS XXX",
-    "yyyy-MM-dd'T'H:m:s.SSS XXX",
-    "M/d/yyyy H:m:s XXX",
-    "d/M/yyyy H:m:s XXX",
-    "MMM d yyyy H:m:s XXX",
-    "MMMM d yyyy H:m:s XXX",
-    "d MMM yyyy H:m:s XXX",
-    "M/d/yyyy h:m:s a XXX",
-    "M/d/yyyy h:m a XXX",
-    "MMM d yyyy h:m:s a XXX",
-    "MMM d yyyy h:m a XXX",
-    "yyyy-MM-dd h:m:s a XXX",
-    "yyyy-MM-dd h:m a XXX",
-    "yyyy-MM-dd H:m:s zzz",
-    "yyyy-MM-dd'T'H:m:s zzz",
-]
-
-# r7: literal abbreviation -> offset map (VERDICT r6 #6).  dateutil
-# cannot resolve these either without an explicit ``tzinfos`` mapping;
-# THIS dict is that mapping's single source of truth — the test corpus
-# passes the same dict (converted to seconds) to dateutil, so the two
-# engines agree by construction.  UTC/GMT stay on the zzz path above
-# (dateutil resolves those itself).  Ambiguous abbreviations (CST, IST)
-# resolve to the offset recorded here — an explicit tzinfos map is the
-# only way dateutil disambiguates them too.
+# dateutil resolves a zone abbreviation only through an explicit
+# ``tzinfos=`` map, and THIS dict is that map's single source of truth:
+# the ``singer`` data source and the parity tests hand the same dict (in
+# seconds) to dateutil, so the engines agree by construction.  UTC/GMT are
+# absent because both engines resolve them unaided.  Ambiguous
+# abbreviations (CST, IST) take the offset recorded here.
 TZ_ABBREV_OFFSETS = {
     "EST": "-05:00", "EDT": "-04:00",
     "CST": "-06:00", "CDT": "-05:00",
@@ -171,18 +71,8 @@ TZ_ABBREV_OFFSETS = {
     "NZST": "+12:00", "NZDT": "+13:00",
 }
 
-# Trailing-abbreviation detector on the RAW string (one cheap rlike):
-# gates the ISO cast off for rows the tzinfos map owns.
-_TZ_ABBREV_TRAILING = (
-    r"\s(" + "|".join(sorted(TZ_ABBREV_OFFSETS, key=len, reverse=True))
-    + r")\s*$"
-)
-
-# The _TZ_TS_FORMATS are tried against the tz-substituted string only;
-# the base formats keep the smaller cleaning tree (a single Column
-# expression is re-inlined per format attempt, so tree size is a real
-# codegen-memory budget — the first cut of this feature OOM'd the JVM
-# by inlining a 26-branch CASE into all 57 attempts).
+# A trailing mapped abbreviation; group 1 is its TZ_ABBREV_OFFSETS key.
+_TZ_ABBREV_TRAILING = r"\s(" + "|".join(TZ_ABBREV_OFFSETS) + r")\s*$"
 
 # Leading weekday tokens dateutil skips ("Tuesday, June 3, 2021");
 # anchored, so month names containing weekday substrings can't be hit.
@@ -191,57 +81,69 @@ _WEEKDAY_PREFIX = (
     r"|mon|tue|tues|wed|thu|thur|thurs|fri|sat|sun)[,.]?\s+"
 )
 
+# Optional clock and zone sections shared by every date shape.  The
+# meridiem section comes before the 24-hour one: an optional section that
+# parses is kept, so "10:30:45 PM" read by ``H:m:s`` first would leave
+# " PM" unparsed.
+_CLOCK = "[ h[:m[:s]] a][ H:m[:s[.SSSSSS]]][ XXX][ zzz]"
+
+# Patterns for the cleaned string (see lenient_timestamp), tried in
+# order.  M/d comes before d/M, as in dateutil: "01/02/2024" is Jan 2,
+# while "15/01/2024" fails M/d (month 15) and parses as d/M.
+# ``[MMMM][MMM]`` takes a full month name, else a short one.
+_TS_PATTERNS = [
+    "M/d/yyyy" + _CLOCK,
+    "d/M/yyyy" + _CLOCK,
+    "yyyy/M/d" + _CLOCK,
+    "[MMMM][MMM] d yyyy" + _CLOCK,
+    "d [MMMM][MMM] yyyy" + _CLOCK,
+    "yyyyMMdd['T'HHmmss]",
+]
+
 
 def lenient_timestamp(raw: Column) -> Column:
     """Best-effort string -> timestamp; null (never error) on failure.
 
-    ``try_cast(timestamp)`` handles the ISO-8601 family (``T`` separator,
-    ``Z`` / numeric offsets, date-only, fractional seconds); the
-    ``try_to_timestamp`` chain picks up common non-ISO spellings.  The
-    cleaning pass normalizes the dateutil-isms onto the format chain
-    (r5+r6): leading weekday names ("Tuesday, June 3, 2021"), ordinal
-    day suffixes and the word "of" ("3rd of June 2021"), commas
-    anywhere (dateutil treats them as whitespace), and an am/pm
-    attached to its hour digit ("4pm" -> "4 pm").  Result is truncated
-    to millisecond precision (reference pa.timestamp("ms")).
+    One grammar approximating dateutil.parser (reference sinks.py:96-101):
+
+    1. A trailing mapped zone abbreviation becomes its fixed offset (one
+       map lookup).  This runs before anything parses a zone name,
+       because java.time resolves bare abbreviations to DST-observing
+       region zones (summer "CST" would be America/Chicago's -05:00, not
+       the map's -06:00).
+    2. ``try_cast(timestamp)`` takes the ISO-8601 family (``T``
+       separator, ``Z`` / numeric offsets, fractional seconds).  It reads
+       the substituted string, not the raw one, because the cast also
+       resolves a bare abbreviation to its region zone.
+    3. Otherwise the string is cleaned once -- leading weekday, ordinal
+       suffixes and "of", an attached am/pm ("4pm"), commas and repeated
+       whitespace; numeric date separators become ``/`` and
+       "15-Jan-2024" becomes "15 Jan 2024" -- and tried against
+       ``_TS_PATTERNS``.  The cleaned string is referenced once per
+       pattern, which keeps a wide ingest projection inside the 64 KB
+       generated-method limit of whole-stage codegen.
+
+    The result is truncated to millisecond precision (reference
+    pa.timestamp("ms")).
     """
-    cleaned = F.regexp_replace(raw, _WEEKDAY_PREFIX, "")
-    cleaned = F.regexp_replace(
-        F.regexp_replace(cleaned, r"(?i)(\d{1,2})(st|nd|rd|th)\b", "$1"),
-        r"(?i)\bof\s+",
-        "",
+    offsets = F.create_map(
+        *[F.lit(x) for kv in TZ_ABBREV_OFFSETS.items() for x in kv]
     )
-    cleaned = F.regexp_replace(cleaned, r",\s*", " ")
+    zoned = F.concat_ws(
+        " ",
+        F.regexp_replace(raw, _TZ_ABBREV_TRAILING, ""),
+        F.try_element_at(offsets, F.regexp_extract(raw, _TZ_ABBREV_TRAILING, 1)),
+    )
+    cleaned = F.regexp_replace(zoned, _WEEKDAY_PREFIX, "")
+    cleaned = F.regexp_replace(cleaned, r"(?i)(\d{1,2})(st|nd|rd|th)\b", "$1")
+    cleaned = F.regexp_replace(cleaned, r"(?i)\bof\s+", "")
     cleaned = F.regexp_replace(cleaned, r"(?i)(\d)\s*(am|pm)\b", "$1 $2")
-    cleaned = F.trim(F.regexp_replace(cleaned, r"\s+", " "))
-    # tzinfos substitution (r7): a trailing mapped abbreviation becomes
-    # its numeric offset so the XXX formats pick it up.  A LINEAR chain
-    # of anchored replaces (each leaves non-matching strings untouched;
-    # at most one can match, and the \s anchor keeps 3-letter tails of
-    # 4-letter abbreviations — EST in WEST/CEST/AEST, KST in AKST —
-    # from double-firing) keeps the expression tree linear in the map
-    # size, where a CASE-chain re-inlining the cleaning tree per branch
-    # blew up codegen.
-    cleaned_tz = cleaned
-    for k, v in TZ_ABBREV_OFFSETS.items():
-        cleaned_tz = F.regexp_replace(cleaned_tz, rf"\s{k}$", f" {v}")
-    # The ISO cast ALSO resolves bare zone abbreviations — to java.time
-    # REGION zones with DST ("... CST" in July casts as America/Chicago
-    # = -05:00 where the map's contract says -06:00), so it must be
-    # suppressed whenever the raw string ends with a mapped
-    # abbreviation; those rows parse through the substituted XXX chain
-    # instead (review r7 finding #1; the summer-CST rows in
-    # tests/test_r3_hardening.py pin this).
-    iso = F.when(
-        ~raw.rlike(_TZ_ABBREV_TRAILING), raw.try_cast("timestamp")
-    )
+    cleaned = F.trim(F.regexp_replace(cleaned, r"[\s,]+", " "))
+    cleaned = F.regexp_replace(cleaned, r"^(\d{1,4})[-.](\d{1,2})[-.]", "$1/$2/")
+    cleaned = F.regexp_replace(cleaned, r"^(\d{1,2})-([A-Za-z]+)-", "$1 $2 ")
     parsed = F.coalesce(
-        iso,
-        *[F.try_to_timestamp(cleaned, F.lit(fmt)) for fmt in _TS_FORMATS],
-        *[
-            F.try_to_timestamp(cleaned_tz, F.lit(fmt))
-            for fmt in _TZ_TS_FORMATS
-        ],
+        zoned.try_cast("timestamp"),
+        *[F.try_to_timestamp(cleaned, F.lit(p)) for p in _TS_PATTERNS],
     )
     return F.date_trunc("millisecond", parsed)
 

@@ -32,9 +32,11 @@ import json
 import math
 import os
 import re
+import warnings
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from dataclasses import dataclass
+from dateutil import parser as du
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -45,6 +47,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from target_parquet_spark.coerce import TZ_ABBREV_OFFSETS
 from target_parquet_spark.schema import resolve_schema
 
 __all__ = ["SingerDataSource"]
@@ -327,21 +330,11 @@ class _SingerWriter(DataSourceWriter):
                 os.remove(m.path)
 
 
-# strptime fallbacks mirroring the most common entries of
-# coerce._TS_FORMATS (the JVM chain is the full-leniency surface; this
-# reader covers ISO-8601 plus the frequent tap spellings and applies the
-# same millisecond truncation as the parquet sink contract)
-_PY_TS_FORMATS = [
-    "%m/%d/%Y %H:%M:%S",
-    "%m/%d/%Y",
-    "%Y/%m/%d %H:%M:%S",
-    "%Y/%m/%d",
-    "%Y%m%dT%H%M%S",
-    "%Y%m%d",
-    "%b %d, %Y",
-    "%d %b %Y",
-    "%B %d, %Y",
-]
+# coerce.TZ_ABBREV_OFFSETS in seconds, as dateutil's ``tzinfos`` takes it
+_TZINFOS = {
+    k: (-1 if off[0] == "-" else 1) * (int(off[1:3]) * 3600 + int(off[4:6]) * 60)
+    for k, off in TZ_ABBREV_OFFSETS.items()
+}
 
 _LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
 _INT_RE = re.compile(r"^[+-]?[0-9]+$")
@@ -354,26 +347,26 @@ def _converter(dt: T.DataType):
     engine's repair-to-NULL contract).  Each branch mirrors the batch
     path's semantics: booleans accept only the try_cast('boolean')
     spellings, integers REJECT non-integral input rather than truncate,
-    timestamps are truncated to millisecond precision (the parquet-sink
-    parity in coerce.py)."""
+    timestamps parse as dateutil does with coerce.TZ_ABBREV_OFFSETS as
+    its ``tzinfos`` -- the contract coerce.lenient_timestamp is pinned
+    to -- and are truncated to millisecond precision."""
     if isinstance(dt, T.TimestampType):
 
         def conv_ts(v):
             if v is None or v == "":
                 return None
             s = str(v).strip()
-            d = None
             try:
                 d = datetime.fromisoformat(s.replace("Z", "+00:00"))
             except ValueError:
-                for fmt in _PY_TS_FORMATS:
+                # dateutil only warns on an unknown zone name and returns
+                # the naive clock time; the batch path nulls that string
+                with warnings.catch_warnings():
+                    warnings.simplefilter("error", du.UnknownTimezoneWarning)
                     try:
-                        d = datetime.strptime(s, fmt)
-                        break
-                    except ValueError:
-                        continue
-            if d is None:
-                return None
+                        d = du.parse(s, tzinfos=_TZINFOS)
+                    except (ValueError, OverflowError, du.UnknownTimezoneWarning):
+                        return None
             if d.tzinfo is None:
                 d = d.replace(tzinfo=timezone.utc)
             # millisecond truncation: the engine writes ms-precision

@@ -27,6 +27,7 @@ import datetime as _dt
 import json
 from typing import Iterator
 
+from dateutil import parser as du
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -164,12 +165,7 @@ def _parse_value_exact(value, rf: ResolvedField):
         if rf.type_id == "string" and rf.format == "date-time":
             if isinstance(value, _dt.datetime):
                 return value
-            try:
-                from dateutil import parser as _du
-
-                return _du.parse(value)
-            except ImportError:
-                return _dt.datetime.fromisoformat(str(value).replace("Z", "+00:00"))
+            return du.parse(value)
         if rf.type_id == "string":
             if isinstance(value, (list, dict)):
                 return json.dumps(value, default=str)

@@ -48,6 +48,69 @@ def test_kmeans_codebook_deterministic_and_shaped(spark):
 # ---------------------------------------------------------------------------
 
 
+DATEUTIL_CORPUS = [
+    "2024-01-15T10:30:00Z",          # the reference's own test spelling
+    "2024-01-15T10:30:00.123456",
+    "2024-01-15 10:30:45",
+    "2024-01-15",
+    "1/15/2024 10:30:00",
+    "01/15/2024",
+    "15/01/2024",                     # day-first fallback
+    "01-15-2024 10:30:00",
+    "01-15-2024",
+    "15-01-2024",                     # day-first fallback
+    "2024/01/15 10:30:00",
+    "2024/01/15",
+    "2024.01.15",
+    "20240115",
+    "20240115T103000",
+    "Jan 15 2024 10:30:00",
+    "Jan 15, 2024",
+    "Jan 15 2024",
+    "January 15, 2024",
+    "January 15, 2024 10:30:00",
+    "15 Jan 2024",
+    "15 Jan 2024 10:30:00",
+    "15 January 2024",
+    "15-Jan-2024",
+    # r5 additions (VERDICT r4 #9): ordinals, "of", AM/PM, zone names
+    "3rd of June 2021",
+    "June 3rd, 2021",
+    "21st of March 2022 10:30:00",
+    "June 3 2021",
+    "1/15/2024 10:30 PM",
+    "1/15/2024 10:30:45 PM",
+    "Jan 15 2024 10:30 PM",
+    "Jan 15, 2024 10:30 AM",
+    "Jan 15, 2024 10:30:45 PM",
+    "June 3, 2021 5:07 AM",
+    "June 3, 2021 5:07:09 AM",
+    "15 Jan 2024 10:30 PM",
+    "15 Jan 2024 10:30:45 PM",
+    "2024-01-15 10:30 PM",
+    "2024-01-15 10:30:45 PM",
+    "2024-01-15 10:30:00 UTC",
+    "2024-01-15 10:30:00 GMT",
+    "2024-01-15T10:30:00 UTC",
+    # r6 (VERDICT r5 missing #3): weekday prefixes, commas anywhere,
+    # attached / hour-only meridiems — the remaining dateutil-isms
+    # short of tzinfos-requiring zone abbreviations (out of scope in
+    # dateutil too without a tzinfos map)
+    "Tuesday, June 3, 2021",
+    "Tue Jun 3 2021 16:30:00",
+    "Thu, 15 Jan 2024",
+    "June 3, 2021, 4:30 PM",
+    "June 3 2021 4pm",
+    "3rd of June 2021 4pm",
+    "June 3rd, 2021, 4:30pm",
+    "1/15/2024 10pm",
+    "2024-01-15 10 PM",
+    # numeric dates with dot separators; a weekday before an ISO date
+    "01.15.2024 10:30:00",
+    "Mon 2024-01-15",
+]
+
+
 def test_lenient_timestamp_matches_dateutil_corpus(spark):
     """Every spelling in the corpus must parse to exactly what the
     reference's dateutil.parser.parse would produce (ms-truncated).
@@ -56,64 +119,7 @@ def test_lenient_timestamp_matches_dateutil_corpus(spark):
 
     from target_parquet_spark.coerce import lenient_timestamp
 
-    corpus = [
-        "2024-01-15T10:30:00Z",          # the reference's own test spelling
-        "2024-01-15T10:30:00.123456",
-        "2024-01-15 10:30:45",
-        "2024-01-15",
-        "1/15/2024 10:30:00",
-        "01/15/2024",
-        "15/01/2024",                     # day-first fallback
-        "01-15-2024 10:30:00",
-        "01-15-2024",
-        "15-01-2024",                     # day-first fallback
-        "2024/01/15 10:30:00",
-        "2024/01/15",
-        "2024.01.15",
-        "20240115",
-        "20240115T103000",
-        "Jan 15 2024 10:30:00",
-        "Jan 15, 2024",
-        "Jan 15 2024",
-        "January 15, 2024",
-        "January 15, 2024 10:30:00",
-        "15 Jan 2024",
-        "15 Jan 2024 10:30:00",
-        "15 January 2024",
-        "15-Jan-2024",
-        # r5 additions (VERDICT r4 #9): ordinals, "of", AM/PM, zone names
-        "3rd of June 2021",
-        "June 3rd, 2021",
-        "21st of March 2022 10:30:00",
-        "June 3 2021",
-        "1/15/2024 10:30 PM",
-        "1/15/2024 10:30:45 PM",
-        "Jan 15 2024 10:30 PM",
-        "Jan 15, 2024 10:30 AM",
-        "Jan 15, 2024 10:30:45 PM",
-        "June 3, 2021 5:07 AM",
-        "June 3, 2021 5:07:09 AM",
-        "15 Jan 2024 10:30 PM",
-        "15 Jan 2024 10:30:45 PM",
-        "2024-01-15 10:30 PM",
-        "2024-01-15 10:30:45 PM",
-        "2024-01-15 10:30:00 UTC",
-        "2024-01-15 10:30:00 GMT",
-        "2024-01-15T10:30:00 UTC",
-        # r6 (VERDICT r5 missing #3): weekday prefixes, commas anywhere,
-        # attached / hour-only meridiems — the remaining dateutil-isms
-        # short of tzinfos-requiring zone abbreviations (out of scope in
-        # dateutil too without a tzinfos map)
-        "Tuesday, June 3, 2021",
-        "Tue Jun 3 2021 16:30:00",
-        "Thu, 15 Jan 2024",
-        "June 3, 2021, 4:30 PM",
-        "June 3 2021 4pm",
-        "3rd of June 2021 4pm",
-        "June 3rd, 2021, 4:30pm",
-        "1/15/2024 10pm",
-        "2024-01-15 10 PM",
-    ]
+    corpus = DATEUTIL_CORPUS
     df = spark.createDataFrame([(s,) for s in corpus], "raw string")
     got = {
         r.raw: r.ts
@@ -138,6 +144,38 @@ def test_lenient_timestamp_matches_dateutil_corpus(spark):
     )
 
 
+TZINFOS_CORPUS = [
+    "2024-01-15 10:30:00 EST",
+    "2024-01-15T10:30:00 PST",
+    "1/15/2024 10:30:00 CET",
+    "15/01/2024 10:30:00 CEST",
+    "Jan 15 2024 10:30:00 JST",
+    "January 15, 2024 10:30:00 IST",   # half-hour offset
+    "15 Jan 2024 10:30:00 AEDT",       # 4-letter, ST-suffix overlap
+    "1/15/2024 10:30 PM NZDT",
+    "Jan 15, 2024 10:30:45 PM HST",
+    "2024-01-15 10:30 PM AKST",
+    "Tuesday, Jan 16, 2024 10:30:00 BST",  # weekday + comma + tz
+    # review r7 #1 (the zzz hijack): java.time resolves bare
+    # abbreviations to DST-observing REGION zones, so summer CST
+    # parsed via zzz would be America/Chicago's -05:00 instead of
+    # the map's fixed -06:00 (and BST London instead of +01:00...
+    # in winter, -00:00!).  The XXX formats must see the
+    # substituted string FIRST — these rows pin that order.
+    "2024-07-15 10:30:00 CST",
+    "2024-07-15T10:30:00 PST",
+    "2024-07-15 10:30:00 CET",
+    "2024-01-16 10:30:00 BST",
+    # ADVICE r7: fractional seconds + mapped abbreviation — the
+    # abbrev gate suppresses the ISO cast for these, so without
+    # .SSS variants in _TZ_TS_FORMATS they nulled out entirely.
+    "2024-01-15 10:30:00.123 EST",
+    "2024-07-15 10:30:00.123 CST",   # summer: must be map's -06:00
+    "2024-01-15T10:30:00.456 PST",
+    "2024-01-15 10:30:00.5 JST",     # 1-digit fraction
+]
+
+
 def test_lenient_timestamp_tzinfos_abbreviations(spark):
     """r7 (VERDICT r6 #6): trailing timezone abbreviations resolve via
     the literal TZ_ABBREV_OFFSETS map — dateutil itself needs the SAME
@@ -160,36 +198,7 @@ def test_lenient_timestamp_tzinfos_abbreviations(spark):
         return sign * (int(h) * 3600 + int(m) * 60)
 
     tzinfos = {k: _secs(v) for k, v in TZ_ABBREV_OFFSETS.items()}
-    corpus = [
-        "2024-01-15 10:30:00 EST",
-        "2024-01-15T10:30:00 PST",
-        "1/15/2024 10:30:00 CET",
-        "15/01/2024 10:30:00 CEST",
-        "Jan 15 2024 10:30:00 JST",
-        "January 15, 2024 10:30:00 IST",   # half-hour offset
-        "15 Jan 2024 10:30:00 AEDT",       # 4-letter, ST-suffix overlap
-        "1/15/2024 10:30 PM NZDT",
-        "Jan 15, 2024 10:30:45 PM HST",
-        "2024-01-15 10:30 PM AKST",
-        "Tuesday, Jan 16, 2024 10:30:00 BST",  # weekday + comma + tz
-        # review r7 #1 (the zzz hijack): java.time resolves bare
-        # abbreviations to DST-observing REGION zones, so summer CST
-        # parsed via zzz would be America/Chicago's -05:00 instead of
-        # the map's fixed -06:00 (and BST London instead of +01:00...
-        # in winter, -00:00!).  The XXX formats must see the
-        # substituted string FIRST — these rows pin that order.
-        "2024-07-15 10:30:00 CST",
-        "2024-07-15T10:30:00 PST",
-        "2024-07-15 10:30:00 CET",
-        "2024-01-16 10:30:00 BST",
-        # ADVICE r7: fractional seconds + mapped abbreviation — the
-        # abbrev gate suppresses the ISO cast for these, so without
-        # .SSS variants in _TZ_TS_FORMATS they nulled out entirely.
-        "2024-01-15 10:30:00.123 EST",
-        "2024-07-15 10:30:00.123 CST",   # summer: must be map's -06:00
-        "2024-01-15T10:30:00.456 PST",
-        "2024-01-15 10:30:00.5 JST",     # 1-digit fraction
-    ]
+    corpus = TZINFOS_CORPUS
     df = spark.createDataFrame([(s,) for s in corpus], "raw string")
     got = {
         r.raw: r.ts

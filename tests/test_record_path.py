@@ -345,3 +345,54 @@ def test_write_plan_parses_record_json_once(spark, tmp_path, monkeypatch):
     parse = re.compile(r"from_json\((?:StructField\([^()]*\), )+record_json#\d+")
     assert len(plans) == 4
     assert [len(parse.findall(p)) for p in plans] == [1] * 4
+
+
+def _wide_lines(invalid: bool):
+    """2 streams of a 25-column schema with one ``date-time`` column; with
+    ``invalid``, one record per stream breaks a ``maximum``."""
+    props = {
+        "id": {"type": ["integer"]},
+        "ts": {"type": ["string", "null"], "format": "date-time"},
+    }
+    props.update({f"n{i}": {"type": ["number", "null"], "maximum": 1000} for i in range(8)})
+    props.update({f"s{i}": {"type": ["string", "null"], "maxLength": 32} for i in range(8)})
+    props.update({f"b{i}": {"type": ["boolean", "null"]} for i in range(7)})
+    assert len(props) == 25
+    lines = [
+        _msg(type="SCHEMA", stream=s, schema=_schema(props), key_properties=["id"])
+        for s in "ab"
+    ]
+    for i in range(10):
+        rec = {"id": i, "ts": f"1/{i + 1}/2024 10:30 PM EST"}
+        rec.update({f"n{j}": 5000 if invalid and i == 3 else i * 1.5 for j in range(8)})
+        rec.update({f"s{j}": f"v{i}" for j in range(8)})
+        rec.update({f"b{j}": i % 2 == 0 for j in range(7)})
+        lines += [_msg(type="RECORD", stream=s, record=rec) for s in "ab"]
+    return lines
+
+
+@pytest.mark.parametrize("mode", ["default", "strict", "quarantine"])
+def test_wide_ingest_write_compiles(spark, tmp_path, mode):
+    """The write projection of a 25-column schema with a ``date-time``
+    column stays within whole-stage codegen's generated-code limit:
+    with interpreted fallback disabled, a projection that fails to
+    compile raises instead of running slowly."""
+    config = {"filepath": str(tmp_path / "out"), "file_naming_scheme": "{stream}"}
+    if mode == "strict":
+        config["strict_validation"] = True
+    if mode == "quarantine":
+        config["quarantine_path"] = str(tmp_path / "quarantine")
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        res = SingerTarget(spark, config).run_strings(_wide_lines(mode != "strict"))
+    finally:
+        spark.conf.set(key, prev)
+    kept, bad = {"default": (10, 1), "strict": (10, 0), "quarantine": (9, 1)}[mode]
+    assert res["metrics"] == {
+        "recordCount": {"a": kept, "b": kept},
+        "validationViolations": {"a": bad, "b": bad},
+    }
+    ts = sorted(r.ts for r in read_stream_output(spark, res["paths"]["a"]).collect())
+    assert ts[0].isoformat() == "2024-01-02T03:30:00"

@@ -166,6 +166,37 @@ def test_converter_parity_with_batch_coercion(spark, tmp_path):
     assert rows[4].b is False
 
 
+def test_timestamps_match_batch_coercion_on_parity_corpora(spark, tmp_path):
+    """Every string of the dateutil parity corpora reads to the value the
+    batch target's lenient_timestamp gives it, unparseable ones (NULL)
+    included: an unknown zone name is a miss, not a naive clock time."""
+    from pyspark.sql import functions as F
+
+    from target_parquet_spark.coerce import lenient_timestamp
+    from tests.test_r3_hardening import DATEUTIL_CORPUS, TZINFOS_CORPUS
+
+    corpus = DATEUTIL_CORPUS + TZINFOS_CORPUS + [
+        "not a date",
+        "2024-01-15 10:30:00 XQZT",
+    ]
+    p = tmp_path / "m.jsonl"
+    p.write_text(
+        "\n".join(
+            [_schema_msg()] + [_record("s", id=i, ts=s) for i, s in enumerate(corpus)]
+        )
+    )
+    got = {r.id: r.ts for r in spark.read.format("singer").load(str(p)).collect()}
+    want = {
+        r.id: r.ts
+        for r in spark.createDataFrame(list(enumerate(corpus)), "id long, raw string")
+        .select("id", lenient_timestamp(F.col("raw")).alias("ts"))
+        .collect()
+    }
+    for i, s in enumerate(corpus):
+        assert got[i] == want[i], f"{s!r}: reader={got[i]!r} batch={want[i]!r}"
+    assert sum(t is None for t in want.values()) == 2
+
+
 def test_unmatched_glob_raises_clear_error(spark, tmp_path):
     with pytest.raises(Exception, match="no files match"):
         spark.read.format("singer").load(f"{tmp_path}/nothing-*.jsonl")
