@@ -6,7 +6,7 @@ Singer SCHEMA/RECORD/STATE messages into typed Parquet files.  This package
 re-expresses that surface Spark-first:
 
 - ``schema``      Singer JSON Schema (draft-7) -> ``StructType``  (SURVEY §1.2)
-- ``coerce``      value coercion as Catalyst ``Column`` expressions (C4-C11)
+- ``coerce``      value coercion as Catalyst expressions from SQL text (C4-C11)
 - ``validation``  JSON-Schema keywords compiled to SQL predicates  (V1-V4)
 - ``target``      the batch Singer target: text lines -> per-stream Parquet
 - ``streaming``   Structured Streaming ingest (readStream + foreachBatch)

@@ -1,10 +1,13 @@
-"""Value coercion as Catalyst ``Column`` expressions (C4-C11 in SURVEY §2).
+"""Value coercion as Catalyst expressions (C4-C11 in SURVEY §2).
 
 The reference coerces record values one at a time in a Python loop
 (reference target_parquet/sinks.py:72-112, 165-166).  Here each declared
-field becomes ONE vectorized Column expression applied to the whole
-micro-batch — the per-record loop disappears and the coercions run inside
-whole-stage codegen on the JVM.
+field becomes ONE vectorized expression applied to the whole micro-batch —
+the per-record loop disappears and the coercions run inside whole-stage
+codegen on the JVM.  The expressions are rendered as Spark SQL text
+(sql_text.py quotes literals and identifiers) and each reaches the JVM in
+one ``F.expr`` parse, instead of a ``Column`` tree assembled one py4j
+round trip per node.
 
 Input convention: the Singer RECORD payload is parsed with
 ``from_json(record, <all-string struct>)`` so every declared field arrives
@@ -43,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from target_parquet_spark import sql_text as S
 from target_parquet_spark.schema import ResolvedField
 
 __all__ = ["coerce_expr", "coerce_columns", "lenient_timestamp"]
@@ -101,8 +105,37 @@ _TS_PATTERNS = [
 ]
 
 
-def lenient_timestamp(raw: Column) -> Column:
-    """Best-effort string -> timestamp; null (never error) on failure.
+def _sub(text: str, pattern: str, replacement: str) -> str:
+    return f"regexp_replace({text}, {S.string(pattern)}, {S.string(replacement)})"
+
+
+def _timestamp_sql(raw: str) -> str:
+    """SQL text of :func:`lenient_timestamp` over the SQL text ``raw``."""
+    offsets = "map(" + ", ".join(
+        S.string(x) for kv in TZ_ABBREV_OFFSETS.items() for x in kv
+    ) + ")"
+    trailing = S.string(_TZ_ABBREV_TRAILING)
+    zoned = (
+        f"concat_ws(' ', regexp_replace({raw}, {trailing}, ''), "
+        f"try_element_at({offsets}, regexp_extract({raw}, {trailing}, 1)))"
+    )
+    cleaned = _sub(zoned, _WEEKDAY_PREFIX, "")
+    cleaned = _sub(cleaned, r"(?i)(\d{1,2})(st|nd|rd|th)\b", "$1")
+    cleaned = _sub(cleaned, r"(?i)\bof\s+", "")
+    cleaned = _sub(cleaned, r"(?i)(\d)\s*(am|pm)\b", "$1 $2")
+    cleaned = "trim(" + _sub(cleaned, r"[\s,]+", " ") + ")"
+    cleaned = _sub(cleaned, r"^(\d{1,4})[-.](\d{1,2})[-.]", "$1/$2/")
+    cleaned = _sub(cleaned, r"^(\d{1,2})-([A-Za-z]+)-", "$1 $2 ")
+    parsed = ", ".join(
+        [f"try_cast({zoned} AS TIMESTAMP)"]
+        + [f"try_to_timestamp({cleaned}, {S.string(p)})" for p in _TS_PATTERNS]
+    )
+    return f"date_trunc('millisecond', coalesce({parsed}))"
+
+
+def lenient_timestamp(raw: str) -> Column:
+    """Best-effort string -> timestamp over the SQL text ``raw`` (a column
+    name is valid SQL); null (never error) on failure.
 
     One grammar approximating dateutil.parser (reference sinks.py:96-101):
 
@@ -126,57 +159,43 @@ def lenient_timestamp(raw: Column) -> Column:
     The result is truncated to millisecond precision (reference
     pa.timestamp("ms")).
     """
-    offsets = F.create_map(
-        *[F.lit(x) for kv in TZ_ABBREV_OFFSETS.items() for x in kv]
-    )
-    zoned = F.concat_ws(
-        " ",
-        F.regexp_replace(raw, _TZ_ABBREV_TRAILING, ""),
-        F.try_element_at(offsets, F.regexp_extract(raw, _TZ_ABBREV_TRAILING, 1)),
-    )
-    cleaned = F.regexp_replace(zoned, _WEEKDAY_PREFIX, "")
-    cleaned = F.regexp_replace(cleaned, r"(?i)(\d{1,2})(st|nd|rd|th)\b", "$1")
-    cleaned = F.regexp_replace(cleaned, r"(?i)\bof\s+", "")
-    cleaned = F.regexp_replace(cleaned, r"(?i)(\d)\s*(am|pm)\b", "$1 $2")
-    cleaned = F.trim(F.regexp_replace(cleaned, r"[\s,]+", " "))
-    cleaned = F.regexp_replace(cleaned, r"^(\d{1,4})[-.](\d{1,2})[-.]", "$1/$2/")
-    cleaned = F.regexp_replace(cleaned, r"^(\d{1,2})-([A-Za-z]+)-", "$1 $2 ")
-    parsed = F.coalesce(
-        zoned.try_cast("timestamp"),
-        *[F.try_to_timestamp(cleaned, F.lit(p)) for p in _TS_PATTERNS],
-    )
-    return F.date_trunc("millisecond", parsed)
+    return F.expr(_timestamp_sql(raw))
 
 
-def coerce_expr(raw: Column, rf: ResolvedField) -> Column:
-    """One vectorized Column implementing the reference's parse_record_value
-    (reference sinks.py:72-112) for the resolved field ``rf``."""
+def coerce_expr(raw: str, rf: ResolvedField) -> str:
+    """SQL text of one vectorized expression implementing the reference's
+    parse_record_value (reference sinks.py:72-112) for the resolved field
+    ``rf``, over the SQL text ``raw`` of its raw capture."""
     if rf.type_id == "null":
         # All-null column (see schema.py for the NullType->string deviation).
-        return F.lit(None).cast("string").alias(rf.name)
-
+        return "CAST(NULL AS STRING)"
     if rf.type_id == "string" and rf.format == "date-time":
-        out = F.when(raw == "", F.lit(None)).otherwise(lenient_timestamp(raw))
+        parsed = _timestamp_sql(raw)
     elif rf.type_id == "number":
-        out = F.when(raw == "", F.lit(None)).otherwise(raw.try_cast("double"))
+        parsed = f"try_cast({raw} AS DOUBLE)"
     elif rf.type_id == "integer":
         # Spark's string->long cast rejects "3.2" (→ null) just as Python
         # int() raises; unlike the reference, the pipe survives.
-        out = F.when(raw == "", F.lit(None)).otherwise(raw.try_cast("long"))
+        parsed = f"try_cast({raw} AS BIGINT)"
     elif rf.type_id == "boolean":
-        out = F.when(raw == "", F.lit(None)).otherwise(raw.try_cast("boolean"))
+        parsed = f"try_cast({raw} AS BOOLEAN)"
     else:
         # string / array / object / unknown: raw JSON text passthrough.
-        out = raw
-    return out.alias(rf.name)
+        return raw
+    return f"CASE WHEN {raw} = '' THEN NULL ELSE {parsed} END"
 
 
 def coerce_columns(fields: list[ResolvedField], source_col: str = "record") -> list[Column]:
-    """The full projection: one coercion expression per declared field.
+    """The full projection: one coercion expression per declared field,
+    each parsed from its SQL text in one JVM call.
 
     ``source_col`` is the struct column produced by the all-string
     ``from_json`` parse.  The resulting select is the entire RECORD hot path
     of the reference (validate/coerce/append, sinks.py:162-170) as a single
     Catalyst plan.
     """
-    return [coerce_expr(F.col(f"{source_col}.`{rf.name}`"), rf) for rf in fields]
+    src = S.ident(source_col)
+    return [
+        F.expr(f"{coerce_expr(f'{src}.{S.ident(rf.name)}', rf)} AS {S.ident(rf.name)}")
+        for rf in fields
+    ]

@@ -40,7 +40,9 @@ __all__ = ["ParquetStreamSink", "read_stream_output", "write_json_atomic"]
 def write_json_atomic(path: str, payload, **dump_kw) -> None:
     """Write a JSON sidecar through a temp file and ``os.replace``: a crash
     or a failed dump leaves the previous file whole, never a truncated
-    one."""
+    one.  Creates the parent directory: a run that writes no data still
+    writes its sidecars."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(payload, fh, **dump_kw)

@@ -18,10 +18,11 @@ Spark's execution model:
   row, before anything is written.
 - Each non-empty version is then decoded and appended to its stream's
   parquet directory (B1/B2/W1-W4; BUG-4 fixed by version-append +
-  mergeSchema read).  ``job_metrics.json`` takes its counts from the
-  aggregate and is written ONCE per run — the reference rewrote it per
-  record, an O(n²) anti-pattern called out in SURVEY §4 (reference
-  writers.py:52-74).
+  mergeSchema read).  Streams write concurrently, from a small driver
+  thread pool; a stream's versions append in order.
+  ``job_metrics.json`` takes its counts from the aggregate and is written
+  ONCE per run — the reference rewrote it per record, an O(n²)
+  anti-pattern called out in SURVEY §4 (reference writers.py:52-74).
 
 So a run is a fixed number of Spark jobs: the SCHEMA collect, the
 aggregate, and one write per non-empty version (plus one quarantine write
@@ -45,9 +46,11 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from target_parquet_spark.io.parquet_sink import ParquetStreamSink, write_json_atomic
 from target_parquet_spark.io.singer_source import (
@@ -222,7 +225,10 @@ class SingerTarget:
             for s, (schema, kp) in (carried or {}).items()
         }
         for r in rows:
-            schema = json.loads(r.schema_json) if r.schema_json else {}
+            try:
+                schema = json.loads(r.schema_json) if r.schema_json else {}
+            except ValueError:  # a JSON string: the envelope captures its text
+                schema = None
             # Contract parity (SDK "invalid schema" standard test): a SCHEMA
             # message whose schema is not an object, or whose `properties`
             # is not a mapping, is a hard error.  A MISSING/empty
@@ -364,8 +370,15 @@ class SingerTarget:
         self, routed: DataFrame, plans: list[tuple], got: dict
     ) -> dict:
         """One append per non-empty version; counts come from the
-        aggregate.  A version with zero resolvable columns (SDK "schema
-        with no properties" standard test) is counted without writing a
+        aggregate.  Streams write concurrently, one driver thread each,
+        so their small jobs overlap; a stream's versions append in order
+        within its thread, because concurrent appends into one directory
+        collide on the output committer's ``_temporary`` directory and
+        ``_key_properties.json`` must end with the last version's keys.
+        Every stream finishes before the first error, if any, re-raises.
+
+        A version with zero resolvable columns (SDK "schema with no
+        properties" standard test) is counted without writing a
         zero-column parquet file.  With ``quarantine_path`` (lenient mode
         only — strict already failed), invalid records are REROUTED there
         and the main sink receives only valid rows: the badRecordsPath
@@ -373,24 +386,48 @@ class SingerTarget:
         reference's pass-through (reference sinks.py:136-139)."""
         counts: dict[str, int] = {}
         violations: dict[str, int] = {}
+        writes: dict[str, list[tuple]] = {}  # stream -> its versions to append
         quarantine_root = None if self.strict else self.config.get("quarantine_path")
         for i, (stream, v, fields, pred) in enumerate(plans):
             n, bad = got[("n", i)], got.get(("invalid", i), 0)
             if not n:
                 continue
             if fields:
+                quarantined = bool(quarantine_root and bad)
+                writes.setdefault(stream, []).append((i, v, fields, pred, quarantined))
+                if quarantined:
+                    n -= bad
+            counts[stream] = counts.get(stream, 0) + n
+            violations[stream] = violations.get(stream, 0) + bad
+        decode = decode_records_exact if self.exact else decode_records_jvm
+
+        def write_stream(stream: str) -> None:
+            for i, v, fields, pred, quarantined in writes[stream]:
                 records = routed.filter(F.col("_vidx") == i)
-                if quarantine_root and bad:
+                if quarantined:
                     parsed = records.withColumn(
                         f"_rec{i}",
                         F.from_json(F.col("record_json"), raw_record_struct(fields)),
                     )
                     records = quarantine_invalid(parsed, pred, stream, quarantine_root)
-                    n -= bad
-                decode = decode_records_exact if self.exact else decode_records_jvm
                 self.sink.write(
                     stream, decode(records, fields), key_properties=v.key_properties
                 )
-            counts[stream] = counts.get(stream, 0) + n
-            violations[stream] = violations.get(stream, 0) + bad
+
+        for stream in writes:  # the sink's directory map is not thread-safe
+            self.sink.stream_dir(stream)
+        workers = min(len(writes), self.spark.sparkContext.defaultParallelism)
+        if workers <= 1:
+            for stream in writes:
+                write_stream(stream)
+        else:
+            # inheritable_thread_target: each thread's jobs carry the
+            # caller's job group and local properties.
+            with ThreadPoolExecutor(workers) as pool:
+                futures = [
+                    pool.submit(inheritable_thread_target(self.spark)(write_stream), s)
+                    for s in writes
+                ]
+            for f in futures:
+                f.result()
         return {"recordCount": counts, "validationViolations": violations}

@@ -6,8 +6,11 @@ keywords, swallowing failures unless ``strict_validation`` is set
 (reference sinks.py:131-139).
 
 Spark-first design: the common keyword subset compiles to ONE boolean
-Column predicate evaluated JVM-side inside codegen — validation becomes a
-Catalyst filter instead of a per-record Python call.  The full draft-7
+predicate evaluated JVM-side inside codegen — validation becomes a
+Catalyst filter instead of a per-record Python call.  The predicate is
+rendered as Spark SQL text (sql_text.py quotes literals and identifiers)
+and reaches the JVM in one ``F.expr`` parse, instead of a ``Column`` tree
+assembled one py4j round trip per node.  The full draft-7
 keyword set ($ref / if / allOf / dependencies / patternProperties ...) is
 available through a vectorized fallback UDF built on the ``jsonschema``
 library (import-gated), replicating the reference's relaxations:
@@ -28,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from target_parquet_spark import sql_text as S
 from target_parquet_spark.schema import resolve_property
 
 __all__ = ["compile_predicate", "resolve_refs", "jsonschema_error_udf", "ValidationMode"]
@@ -42,26 +46,34 @@ class ValidationMode:
     LENIENT = "lenient"
 
 
-def _numeric(raw: Column) -> Column:
-    return raw.try_cast("double")
+# Every predicate below is SQL text that parses as one operand: a
+# literal, a function call or a parenthesized expression, so the
+# combinators can join predicates without re-parenthesizing them.
 
 
-def _and_all(preds: list[Column]) -> Column:
+def _numeric(raw: str) -> str:
+    return f"try_cast({raw} AS DOUBLE)"
+
+
+def _and_all(preds: list[str]) -> str:
     if not preds:
-        return F.lit(True)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out & p
-    return out
+        return "true"
+    return preds[0] if len(preds) == 1 else "(" + " AND ".join(preds) + ")"
 
 
-def _or_any(preds: list[Column]) -> Column:
+def _or_any(preds: list[str]) -> str:
     if not preds:
-        return F.lit(False)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
+        return "false"
+    return preds[0] if len(preds) == 1 else "(" + " OR ".join(preds) + ")"
+
+
+def _or_null(value: str, pred: str) -> str:
+    """``pred``, passing a null ``value`` (SQL null semantics)."""
+    return f"({value} IS NULL OR {pred})"
+
+
+def _matches(raw: str, pattern: str) -> str:
+    return f"({raw} RLIKE {S.string(pattern)})"
 
 
 def _branch_type(prop: dict) -> str | None:
@@ -76,12 +88,15 @@ def _branch_type(prop: dict) -> str | None:
     return t
 
 
-def _type_pred(type_id: str | None, raw: Column, num: Column) -> list[Column]:
+def _type_pred(type_id: str | None, raw: str, num: str) -> list[str]:
     if type_id == "integer":
         # draft-7: int-valued floats ARE integers (3.0 passes, 3.5 fails)
-        return [raw.isNull() | (raw == "") | (num.isNotNull() & (num == F.floor(num)))]
+        return [
+            f"({raw} IS NULL OR {raw} = '' "
+            f"OR ({num} IS NOT NULL AND {num} = floor({num})))"
+        ]
     if type_id == "number":
-        return [raw.isNull() | (raw == "") | num.isNotNull()]
+        return [f"({raw} IS NULL OR {raw} = '' OR {num} IS NOT NULL)"]
     return []
 
 
@@ -112,48 +127,58 @@ _RFC3339_TIME = (
 )
 
 
-def _fmt_date(raw: Column) -> Column:
+def _fmt_date(raw: str) -> str:
     # regex pins the shape; try_to_date (null, never an ANSI throw, on
     # an impossible calendar date like 2024-02-30) pins month lengths.
-    return raw.rlike(f"^{_RFC3339_DATE}$") & F.try_to_date(
-        raw, "yyyy-MM-dd"
-    ).isNotNull()
+    return (
+        f"({_matches(raw, '^' + _RFC3339_DATE + '$')} "
+        f"AND try_to_date({raw}, 'yyyy-MM-dd') IS NOT NULL)"
+    )
 
 
-def _fmt_datetime(raw: Column) -> Column:
-    return raw.rlike(f"^{_RFC3339_DATE}[Tt]{_RFC3339_TIME}$") & F.try_to_date(
-        F.substring(raw, 1, 10), "yyyy-MM-dd"
-    ).isNotNull()
+def _fmt_datetime(raw: str) -> str:
+    shape = "^" + _RFC3339_DATE + "[Tt]" + _RFC3339_TIME + "$"
+    return (
+        f"({_matches(raw, shape)} "
+        f"AND try_to_date(substring({raw}, 1, 10), 'yyyy-MM-dd') IS NOT NULL)"
+    )
+
+
+def _fmt_hostname(raw: str) -> str:
+    shape = (
+        r"^[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?"
+        r"(\.[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?)*\.?$"
+    )
+    return f"({_matches(raw, shape)} AND length({raw}) <= 253)"
 
 
 _FORMAT_PREDS = {
     "date": _fmt_date,
     "date-time": _fmt_datetime,
-    "time": lambda raw: raw.rlike(f"^{_RFC3339_TIME}$"),
-    "email": lambda raw: raw.rlike(r"^[^@\s]+@[^@\s]+$"),
-    "hostname": lambda raw: raw.rlike(
-        r"^[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?"
-        r"(\.[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?)*\.?$"
-    )
-    & (F.length(raw) <= 253),
-    "ipv4": lambda raw: raw.rlike(
+    "time": lambda raw: _matches(raw, f"^{_RFC3339_TIME}$"),
+    "email": lambda raw: _matches(raw, r"^[^@\s]+@[^@\s]+$"),
+    "hostname": _fmt_hostname,
+    "ipv4": lambda raw: _matches(
+        raw,
         r"^((25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.){3}"
-        r"(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)$"
+        r"(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)$",
     ),
     # full 8-group form, or exactly one "::" compression with valid
     # groups on each side (approximation: no embedded-IPv4 tail forms)
-    "ipv6": lambda raw: raw.rlike(
+    "ipv6": lambda raw: _matches(
+        raw,
         r"^([0-9A-Fa-f]{1,4}(:[0-9A-Fa-f]{1,4}){7}"
         r"|([0-9A-Fa-f]{1,4}(:[0-9A-Fa-f]{1,4})*)?"
-        r"::([0-9A-Fa-f]{1,4}(:[0-9A-Fa-f]{1,4})*)?)$"
+        r"::([0-9A-Fa-f]{1,4}(:[0-9A-Fa-f]{1,4})*)?)$",
     ),
-    "uuid": lambda raw: raw.rlike(
+    "uuid": lambda raw: _matches(
+        raw,
         r"^[0-9A-Fa-f]{8}-[0-9A-Fa-f]{4}-[0-9A-Fa-f]{4}"
-        r"-[0-9A-Fa-f]{4}-[0-9A-Fa-f]{12}$"
+        r"-[0-9A-Fa-f]{4}-[0-9A-Fa-f]{12}$",
     ),
-    "uri": lambda raw: raw.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*:\S*$"),
-    "uri-reference": lambda raw: raw.rlike(r"^\S*$"),
-    "json-pointer": lambda raw: raw.rlike(r"^(/([^/~]|~[01])*)*$"),
+    "uri": lambda raw: _matches(raw, r"^[A-Za-z][A-Za-z0-9+.\-]*:\S*$"),
+    "uri-reference": lambda raw: _matches(raw, r"^\S*$"),
+    "json-pointer": lambda raw: _matches(raw, r"^(/([^/~]|~[01])*)*$"),
 }
 
 
@@ -172,78 +197,78 @@ def inject_format_markers(schema):
     return schema
 
 
-def _keyword_preds(prop: dict, raw: Column, type_id: str | None) -> list[Column]:
-    """Compile one value subschema's keywords to null-tolerant boolean
-    Columns.  Recursive: combinator branches and ``items`` subschemas
-    re-enter with the same machinery, so arbitrarily nested
-    allOf/anyOf/oneOf/not/items trees compile to one Catalyst tree."""
-    preds: list[Column] = []
+def _keyword_preds(
+    prop: dict, raw: str, type_id: str | None, depth: int = 0
+) -> list[str]:
+    """Compile one value subschema's keywords to null-tolerant boolean SQL
+    predicates over the SQL text ``raw``.  Recursive: combinator branches
+    and ``items`` subschemas re-enter with the same machinery, so
+    arbitrarily nested allOf/anyOf/oneOf/not/items trees compile to one
+    expression.  ``depth`` counts the enclosing lambdas; a lambda opened
+    here binds ``_v<depth>``, so nested lambdas never share a name."""
+    preds: list[str] = []
     num = _numeric(raw)
 
-    def _literal_match(values: list) -> Column | None:
+    def _literal_match(values: list) -> str | None:
         """Raw-capture match for enum/const literals.  JSON spells
         booleans 'true'/'false' (str(True) is 'True' — comparing that
         against the raw capture false-rejected every valid record);
         numbers compare NUMERICALLY (draft-7: 1 == 1.0, and the raw
         text '1.0' never equals '1').  Object/array literals are not
         canonicalizable against raw text -> permissive (None)."""
-        strs = [v for v in values if isinstance(v, str)]
-        bools = [v for v in values if isinstance(v, bool)]
+        if any(
+            not isinstance(v, (str, bool, int, float)) and v is not None
+            for v in values
+        ):
+            return None
+        texts = [
+            S.string(v if isinstance(v, str) else "true" if v else "false")
+            for v in values
+            if isinstance(v, (str, bool))
+        ]
         nums = [
-            float(v)
+            S.double(v)
             for v in values
             if isinstance(v, (int, float)) and not isinstance(v, bool)
         ]
-        others = [
-            v
-            for v in values
-            if not isinstance(v, (str, bool, int, float))
-            and v is not None
-        ]
-        if others:
-            return None
         branches = []
-        if strs:
-            branches.append(raw.isin(strs))
-        if bools:
-            branches.append(
-                raw.isin(["true" if b else "false" for b in bools])
-            )
+        if texts:
+            branches.append(f"({raw} IN ({', '.join(texts)}))")
         if nums:
-            branches.append(num.isin(nums))
+            branches.append(f"({num} IN ({', '.join(nums)}))")
         return _or_any(branches) if branches else None
 
     if "enum" in prop:
         m = _literal_match(list(prop["enum"]))
         if m is not None:
-            preds.append(raw.isNull() | m)
+            preds.append(_or_null(raw, m))
     if "const" in prop:
         m = _literal_match([prop["const"]])
         if m is not None:
-            preds.append(raw.isNull() | m)
+            preds.append(_or_null(raw, m))
     if "pattern" in prop:
-        preds.append(raw.isNull() | raw.rlike(prop["pattern"]))
+        preds.append(_or_null(raw, _matches(raw, prop["pattern"])))
     if "minLength" in prop:
-        preds.append(raw.isNull() | (F.length(raw) >= int(prop["minLength"])))
+        preds.append(_or_null(raw, f"length({raw}) >= {int(prop['minLength'])}"))
     if "maxLength" in prop:
-        preds.append(raw.isNull() | (F.length(raw) <= int(prop["maxLength"])))
-    if "minimum" in prop and not isinstance(prop["minimum"], bool):
-        preds.append(num.isNull() | (num >= float(prop["minimum"])))
-    if "maximum" in prop and not isinstance(prop["maximum"], bool):
-        preds.append(num.isNull() | (num <= float(prop["maximum"])))
-    if "exclusiveMinimum" in prop and not isinstance(prop["exclusiveMinimum"], bool):
-        preds.append(num.isNull() | (num > float(prop["exclusiveMinimum"])))
-    if "exclusiveMaximum" in prop and not isinstance(prop["exclusiveMaximum"], bool):
-        preds.append(num.isNull() | (num < float(prop["exclusiveMaximum"])))
+        preds.append(_or_null(raw, f"length({raw}) <= {int(prop['maxLength'])}"))
+    for key, op in (
+        ("minimum", ">="),
+        ("maximum", "<="),
+        ("exclusiveMinimum", ">"),
+        ("exclusiveMaximum", "<"),
+    ):
+        if key in prop and not isinstance(prop[key], bool):
+            preds.append(_or_null(num, f"{num} {op} {S.double(prop[key])}"))
     if "multipleOf" in prop:
         d = prop["multipleOf"]
         if isinstance(d, int) and not isinstance(d, bool):
             # Integer divisor: plain modulo (reference validator.py:17).
-            preds.append(num.isNull() | (num % F.lit(float(d)) == 0.0))
+            preds.append(_or_null(num, f"{num} % {S.double(d)} = {S.double(0.0)}"))
         # Float divisor: always passes (reference validator.py:12-15).
     fmt = prop.get(_FORMAT_MARKER)
     if fmt in _FORMAT_PREDS:
-        preds.append(raw.isNull() | _FORMAT_PREDS[fmt](raw))
+        preds.append(_or_null(raw, _FORMAT_PREDS[fmt](raw)))
     preds.extend(_type_pred(type_id, raw, num))
 
     # -- array keywords: the raw capture holds the JSON array TEXT; parse
@@ -254,81 +279,69 @@ def _keyword_preds(prop: dict, raw: Column, type_id: str | None) -> list[Column]
     _ARRAY_KEYS = ("items", "minItems", "maxItems", "contains", "uniqueItems",
                    "additionalItems")
     if any(k in prop for k in _ARRAY_KEYS):
-        arr = F.from_json(raw, "array<string>")
-        guard = raw.isNull() | arr.isNull()
-        if "minItems" in prop:
-            preds.append(guard | (F.size(arr) >= int(prop["minItems"])))
-        if "maxItems" in prop:
-            preds.append(guard | (F.size(arr) <= int(prop["maxItems"])))
-        if prop.get("uniqueItems") is True:
-            preds.append(guard | (F.size(F.array_distinct(arr)) == F.size(arr)))
-        # NB: F.forall/F.exists infer the lambda's ARITY from its Python
-        # signature, so closures must bind subschemas via a factory, never
-        # via default args (a 2-param lambda would be called with 2 cols).
-        def _sub_pred(s):
-            return lambda e: _and_all(_keyword_preds(s, e, _branch_type(s)))
+        arr = f"from_json({raw}, 'array<string>')"
 
+        def guarded(pred: str) -> str:
+            return f"({raw} IS NULL OR {arr} IS NULL OR {pred})"
+
+        var = f"_v{depth}"
+
+        def each(sub: dict) -> str:
+            """A lambda holding for an element that satisfies ``sub``."""
+            return f"{var} -> " + _and_all(
+                _keyword_preds(sub, var, _branch_type(sub), depth + 1)
+            )
+
+        if "minItems" in prop:
+            preds.append(guarded(f"size({arr}) >= {int(prop['minItems'])}"))
+        if "maxItems" in prop:
+            preds.append(guarded(f"size({arr}) <= {int(prop['maxItems'])}"))
+        if prop.get("uniqueItems") is True:
+            preds.append(guarded(f"size(array_distinct({arr})) = size({arr})"))
         items = prop.get("items")
         if isinstance(items, dict):
-            preds.append(guard | F.forall(arr, _sub_pred(items)))
+            preds.append(guarded(f"forall({arr}, {each(items)})"))
         elif isinstance(items, list):
             # Tuple form (r5): each index validates against its own
-            # subschema.  F.get is null out-of-bounds (never an ANSI
+            # subschema.  get() is null out-of-bounds (never an ANSI
             # error), and the inner preds are null-tolerant, so a
             # shorter array passes — draft-7's absent-item semantics.
             for i, sub in enumerate(items):
                 if not isinstance(sub, dict):
                     continue
-                el = F.get(arr, i)
+                el = f"get({arr}, {i})"
                 preds.append(
-                    guard | _and_all(_keyword_preds(sub, el, _branch_type(sub)))
+                    guarded(_and_all(_keyword_preds(sub, el, _branch_type(sub), depth)))
                 )
             ai = prop.get("additionalItems")
             if ai is False:
-                preds.append(guard | (F.size(arr) <= len(items)))
+                preds.append(guarded(f"size({arr}) <= {len(items)}"))
             elif isinstance(ai, dict):
-                rest = F.slice(
-                    arr,
-                    len(items) + 1,
-                    F.greatest(F.size(arr) - len(items), F.lit(0)),
-                )
-                preds.append(guard | F.forall(rest, _sub_pred(ai)))
+                n = len(items)
+                rest = f"slice({arr}, {n + 1}, greatest(size({arr}) - {n}, 0))"
+                preds.append(guarded(f"forall({rest}, {each(ai)})"))
         if isinstance(prop.get("contains"), dict):
-            sub = prop["contains"]
-            preds.append(
-                guard
-                | F.exists(
-                    arr,
-                    lambda e: _and_all(_keyword_preds(sub, e, _branch_type(sub))),
-                )
-            )
+            preds.append(guarded(f"exists({arr}, {each(prop['contains'])})"))
 
     # -- combinators (null value passes, matching the per-keyword guards)
+    def branch(sub: dict) -> str:
+        return _and_all(_keyword_preds(sub, raw, _branch_type(sub), depth))
+
     for sub in prop.get("allOf", []):
-        preds.extend(_keyword_preds(sub, raw, _branch_type(sub) or type_id))
+        preds.extend(_keyword_preds(sub, raw, _branch_type(sub) or type_id, depth))
     if prop.get("anyOf"):
-        branches = [
-            _and_all(_keyword_preds(sub, raw, _branch_type(sub)))
-            for sub in prop["anyOf"]
-        ]
-        preds.append(raw.isNull() | _or_any(branches))
+        preds.append(_or_null(raw, _or_any([branch(sub) for sub in prop["anyOf"]])))
     if prop.get("oneOf"):
-        cnt = None
-        for sub in prop["oneOf"]:
-            b = F.when(
-                _and_all(_keyword_preds(sub, raw, _branch_type(sub))), 1
-            ).otherwise(0)
-            cnt = b if cnt is None else cnt + b
-        preds.append(raw.isNull() | (cnt == 1))
-    if isinstance(prop.get("not"), dict):
-        sub = prop["not"]
-        preds.append(
-            raw.isNull() | ~_and_all(_keyword_preds(sub, raw, _branch_type(sub)))
+        cnt = " + ".join(
+            f"CASE WHEN {branch(sub)} THEN 1 ELSE 0 END" for sub in prop["oneOf"]
         )
+        preds.append(_or_null(raw, f"({cnt}) = 1"))
+    if isinstance(prop.get("not"), dict):
+        preds.append(_or_null(raw, f"(NOT {branch(prop['not'])})"))
     return preds
 
 
-def _property_predicate(name: str, prop: dict, raw: Column) -> list[Column]:
+def _property_predicate(name: str, prop: dict, raw: str) -> list[str]:
     """Compile one named property (top level: the declared type comes from
     the same fuzzy resolution the schema/coercion path uses)."""
     rf = resolve_property(name, prop)
@@ -497,14 +510,15 @@ def resolve_refs(
     return walk(schema, schema, base_dir, None, 0)
 
 
-def _raw_object_preds(schema: dict, raw_json_col: str) -> list[Column]:
+def _raw_object_preds(schema: dict, raw_json_col: str) -> list[str]:
     """Object-shape keywords that need the UNDECLARED keys of the raw
     record text — compiled over ``json_object_keys`` (JVM-side, null on
     malformed JSON -> permissive, matching the per-keyword null guards):
     min/maxProperties, propertyNames, patternProperties (r5),
     additionalProperties=false (with patternProperties widening the
-    legal key set)."""
-    preds: list[Column] = []
+    legal key set).  Lambdas here are the outermost, so they bind
+    ``_v0``."""
+    preds: list[str] = []
     pattern_props = schema.get("patternProperties")
     needs = (
         "minProperties" in schema
@@ -515,20 +529,19 @@ def _raw_object_preds(schema: dict, raw_json_col: str) -> list[Column]:
     )
     if not needs:
         return preds
-    keys = F.json_object_keys(F.col(raw_json_col))
-    guard = keys.isNull()
+    raw = S.ident(raw_json_col)
+    keys = f"json_object_keys({raw})"
+
+    def guarded(pred: str) -> str:
+        return f"({keys} IS NULL OR {pred})"
+
     if "minProperties" in schema:
-        preds.append(guard | (F.size(keys) >= int(schema["minProperties"])))
+        preds.append(guarded(f"size({keys}) >= {int(schema['minProperties'])}"))
     if "maxProperties" in schema:
-        preds.append(guard | (F.size(keys) <= int(schema["maxProperties"])))
+        preds.append(guarded(f"size({keys}) <= {int(schema['maxProperties'])}"))
     if isinstance(schema.get("propertyNames"), dict):
-        sub = schema["propertyNames"]
-        preds.append(
-            guard
-            | F.forall(
-                keys, lambda k: _and_all(_keyword_preds(sub, k, "string"))
-            )
-        )
+        body = _and_all(_keyword_preds(schema["propertyNames"], "_v0", "string", 1))
+        preds.append(guarded(f"forall({keys}, _v0 -> {body})"))
     if isinstance(pattern_props, dict):
         # patternProperties (r5): every key matching the regex must have a
         # value satisfying the subschema.  The map<string,string> capture
@@ -536,32 +549,19 @@ def _raw_object_preds(schema: dict, raw_json_col: str) -> list[Column]:
         # subtrees as their JSON serialization), so the value predicates
         # reuse the exact machinery of declared properties.  Malformed
         # JSON parses to null -> permissive, matching the other guards.
-        m = F.from_json(F.col(raw_json_col), "map<string,string>")
-        mguard = m.isNull()
-
-        # Single-arg closures via a factory: F.forall infers lambda arity
-        # from the Python signature, so default-arg binding breaks it.
-        def _entry_pred(p, s):
-            return lambda e: ~e["key"].rlike(p) | _and_all(
-                _keyword_preds(s, e["value"], _branch_type(s))
-            )
-
+        m = f"from_json({raw}, 'map<string,string>')"
         for pat, sub in pattern_props.items():
             if not isinstance(sub, dict):
                 continue
-            preds.append(
-                mguard | F.forall(F.map_entries(m), _entry_pred(pat, sub))
-            )
+            value = _and_all(_keyword_preds(sub, "_v0.value", _branch_type(sub), 1))
+            body = f"((NOT {_matches('_v0.key', pat)}) OR {value})"
+            preds.append(f"({m} IS NULL OR forall(map_entries({m}), _v0 -> {body}))")
     if schema.get("additionalProperties") is False:
         declared = list(schema.get("properties", {}).keys())
         pats = list(pattern_props.keys()) if isinstance(pattern_props, dict) else []
-
-        def _legal(k):
-            branches = [k.isin(declared)] if declared else []
-            branches += [k.rlike(p) for p in pats]
-            return _or_any(branches)
-
-        preds.append(guard | F.forall(keys, _legal))
+        legal = [f"(_v0 IN ({', '.join(S.string(d) for d in declared)}))"] if declared else []
+        legal += [_matches("_v0", p) for p in pats]
+        preds.append(guarded(f"forall({keys}, _v0 -> {_or_any(legal)})"))
     return preds
 
 
@@ -570,23 +570,31 @@ def _addr(
     source_col: str,
     declared: frozenset,
     raw_json_col: str | None,
-) -> Column | None:
-    """Address one property's raw value.  Declared properties read from
-    the parsed struct; UNDECLARED names (legal in draft-7 — `required`,
-    `dependencies` and combinator branches may reference properties the
-    top-level schema never declares) fall back to ``get_json_object``
-    over the raw record text, which yields the same raw-capture
-    semantics (scalar text; null for missing AND for JSON null).
-    Referencing an undeclared field used to build F.col against a
-    struct field that does not exist — an AnalysisException that crashed
-    the whole run.  Returns None (compile permissive) when the name is
-    undeclared and no raw column is available."""
+) -> str | None:
+    """Address one property's raw value, as SQL text.  Declared properties
+    read from the parsed struct; UNDECLARED names (legal in draft-7 —
+    `required`, `dependencies` and combinator branches may reference
+    properties the top-level schema never declares) fall back to
+    ``get_json_object`` over the raw record text, which yields the same
+    raw-capture semantics (scalar text; null for missing AND for JSON
+    null).  Referencing an undeclared field used to address a struct
+    field that does not exist — an AnalysisException that crashed the
+    whole run.  Returns None (compile permissive) when the name is
+    undeclared and no raw column is available, or when no JSON path
+    reaches it: Spark's path reader takes a bracketed name up to the
+    next ``'`` and a dotted one up to the next ``.`` or ``[``, with no
+    escapes, so a name holding ``'`` and one of ``.[`` has no path."""
     if name in declared:
-        return F.col(f"{source_col}.`{name}`")
-    if raw_json_col is not None:
-        safe = name.replace("'", "\\'")
-        return F.get_json_object(F.col(raw_json_col), f"$['{safe}']")
-    return None
+        return f"{S.ident(source_col)}.{S.ident(name)}"
+    if raw_json_col is None:
+        return None
+    if "'" not in name:
+        path = "$['" + name + "']"
+    elif "." not in name and "[" not in name:
+        path = "$." + name
+    else:
+        return None
+    return f"get_json_object({S.ident(raw_json_col)}, {S.string(path)})"
 
 
 def _object_preds(
@@ -594,7 +602,7 @@ def _object_preds(
     source_col: str,
     raw_json_col: str | None = None,
     declared: frozenset | None = None,
-) -> list[Column]:
+) -> list[str]:
     """Object-level compilation: properties + required + combinators +
     dependencies + if/then/else, recursing into subschemas against the
     same record struct.  ``raw_json_col`` (when the caller has the raw
@@ -604,95 +612,59 @@ def _object_preds(
     instance."""
     if declared is None:
         declared = frozenset(schema.get("properties", {}).keys())
-    preds: list[Column] = []
+
+    def addr(name: str) -> str | None:
+        return _addr(name, source_col, declared, raw_json_col)
+
+    def branch(sub: dict) -> str:
+        return _and_all(_object_preds(sub, source_col, raw_json_col, declared))
+
+    preds: list[str] = []
     for name, prop in schema.get("properties", {}).items():
         if not isinstance(prop, dict):
             continue
-        raw = _addr(name, source_col, declared, raw_json_col)
+        raw = addr(name)
         if raw is None:
             continue
         preds.extend(_property_predicate(name, prop, raw))
     for req in schema.get("required", []):
-        ref = _addr(req, source_col, declared, raw_json_col)
+        ref = addr(req)
         if ref is not None:
-            preds.append(ref.isNotNull())
+            preds.append(f"({ref} IS NOT NULL)")
     if raw_json_col is not None:
         preds.extend(_raw_object_preds(schema, raw_json_col))
 
     for sub in schema.get("allOf", []):
         preds.extend(_object_preds(sub, source_col, raw_json_col, declared))
     if schema.get("anyOf"):
-        preds.append(
-            _or_any(
-                [
-                    _and_all(
-                        _object_preds(sub, source_col, raw_json_col, declared)
-                    )
-                    for sub in schema["anyOf"]
-                ]
-            )
-        )
+        preds.append(_or_any([branch(sub) for sub in schema["anyOf"]]))
     if schema.get("oneOf"):
-        cnt = None
-        for sub in schema["oneOf"]:
-            b = F.when(
-                _and_all(
-                    _object_preds(sub, source_col, raw_json_col, declared)
-                ),
-                1,
-            ).otherwise(0)
-            cnt = b if cnt is None else cnt + b
-        preds.append(cnt == 1)
-    if isinstance(schema.get("not"), dict):
-        preds.append(
-            ~_and_all(
-                _object_preds(
-                    schema["not"], source_col, raw_json_col, declared
-                )
-            )
+        cnt = " + ".join(
+            f"CASE WHEN {branch(sub)} THEN 1 ELSE 0 END" for sub in schema["oneOf"]
         )
+        preds.append(f"(({cnt}) = 1)")
+    if isinstance(schema.get("not"), dict):
+        preds.append(f"(NOT {branch(schema['not'])})")
 
     for key, dep in (schema.get("dependencies") or {}).items():
-        trig_ref = _addr(key, source_col, declared, raw_json_col)
-        if trig_ref is None:
+        trigger = addr(key)
+        if trigger is None:
             continue  # trigger not addressable -> permissive
-        trigger = trig_ref.isNotNull()
         if isinstance(dep, list):
-            refs = [_addr(d, source_col, declared, raw_json_col) for d in dep]
-            need = _and_all(
-                [r.isNotNull() for r in refs if r is not None]
-            )
+            refs = [addr(d) for d in dep]
+            need = _and_all([f"({r} IS NOT NULL)" for r in refs if r is not None])
         elif isinstance(dep, dict):
-            need = _and_all(
-                _object_preds(dep, source_col, raw_json_col, declared)
-            )
+            need = branch(dep)
         else:
             continue
-        preds.append(~trigger | need)
+        preds.append(f"({trigger} IS NULL OR {need})")
 
     if isinstance(schema.get("if"), dict):
-        cond = _and_all(
-            _object_preds(schema["if"], source_col, raw_json_col, declared)
+        then_p, else_p = (
+            branch(schema[k]) if isinstance(schema.get(k), dict) else "true"
+            for k in ("then", "else")
         )
-        then_p = (
-            _and_all(
-                _object_preds(
-                    schema["then"], source_col, raw_json_col, declared
-                )
-            )
-            if isinstance(schema.get("then"), dict)
-            else F.lit(True)
-        )
-        else_p = (
-            _and_all(
-                _object_preds(
-                    schema["else"], source_col, raw_json_col, declared
-                )
-            )
-            if isinstance(schema.get("else"), dict)
-            else F.lit(True)
-        )
-        preds.append(F.when(cond, then_p).otherwise(else_p))
+        preds.append(f"CASE WHEN {branch(schema['if'])} THEN {then_p} ELSE {else_p} END")
     return preds
 
 
@@ -705,7 +677,8 @@ def compile_predicate(
     ref_base_dir: str | None = None,
     ref_registry: dict[str, dict] | None = None,
 ) -> Column:
-    """Compile the stream's JSON Schema to one is-valid boolean Column.
+    """Compile the stream's JSON Schema to one is-valid boolean Column,
+    rendered as SQL text and parsed in one JVM call.
 
     Covers (r3, VERDICT #3): enum, const, pattern, min/maxLength,
     minimum/maximum, exclusiveMinimum/Maximum (draft-7 numeric form),
@@ -713,8 +686,8 @@ def compile_predicate(
     family (items, contains, minItems, maxItems, uniqueItems), the
     combinators allOf / anyOf / oneOf / not at both property and object
     level, dependencies (property- and schema-form), and if/then/else —
-    all as ONE Catalyst boolean tree.  Returns ``lit(True)`` when the
-    schema carries no compilable constraints.
+    all as ONE boolean expression.  Returns ``true`` when the schema
+    carries no compilable constraints.
 
     r3 additions: local ``$ref`` pointers are expanded DRIVER-SIDE before
     compilation (resolve_refs — draft-7 sibling-ignoring semantics,
@@ -764,8 +737,7 @@ def compile_predicate(
         if declared_cols is not None
         else frozenset(schema.get("properties", {}).keys())
     )
-    preds = _object_preds(schema, source_col, raw_json_col, declared)
-    return _and_all(preds) if preds else F.lit(True)
+    return F.expr(_and_all(_object_preds(schema, source_col, raw_json_col, declared)))
 
 
 def _build_relaxed_validator(schema: dict):

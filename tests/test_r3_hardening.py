@@ -124,7 +124,7 @@ def test_lenient_timestamp_matches_dateutil_corpus(spark):
     got = {
         r.raw: r.ts
         for r in df.select(
-            "raw", lenient_timestamp(F.col("raw")).alias("ts")
+            "raw", lenient_timestamp("raw").alias("ts")
         ).collect()
     }
     import datetime as dt
@@ -139,7 +139,7 @@ def test_lenient_timestamp_matches_dateutil_corpus(spark):
     # malformed input nulls out instead of erroring (C11)
     bad = spark.createDataFrame([("not a date",)], "raw string")
     assert (
-        bad.select(lenient_timestamp(F.col("raw")).alias("ts")).collect()[0].ts
+        bad.select(lenient_timestamp("raw").alias("ts")).collect()[0].ts
         is None
     )
 
@@ -203,7 +203,7 @@ def test_lenient_timestamp_tzinfos_abbreviations(spark):
     got = {
         r.raw: r.ts
         for r in df.select(
-            "raw", lenient_timestamp(F.col("raw")).alias("ts")
+            "raw", lenient_timestamp("raw").alias("ts")
         ).collect()
     }
     for s in corpus:
@@ -217,7 +217,7 @@ def test_lenient_timestamp_tzinfos_abbreviations(spark):
         [("2024-01-15 10:30:00 XQZT",)], "raw string"
     )
     assert (
-        bad.select(lenient_timestamp(F.col("raw")).alias("ts"))
+        bad.select(lenient_timestamp("raw").alias("ts"))
         .collect()[0]
         .ts
         is None

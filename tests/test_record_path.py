@@ -11,15 +11,20 @@ import os
 import re
 import sys
 import tempfile
+import threading
 import time
 import uuid
 
+import py4j.clientserver
 import pytest
 
 from target_parquet_spark.__main__ import main
+from target_parquet_spark.coerce import coerce_columns
 from target_parquet_spark.io.parquet_sink import ParquetStreamSink, read_stream_output
+from target_parquet_spark.schema import resolve_schema
 from target_parquet_spark.streaming import SingerStreamTarget
 from target_parquet_spark.target import SingerTarget, SingerValidationError
+from target_parquet_spark.validation import compile_predicate
 
 
 def _msg(**kw):
@@ -396,3 +401,140 @@ def test_wide_ingest_write_compiles(spark, tmp_path, mode):
     }
     ts = sorted(r.ts for r in read_stream_output(spark, res["paths"]["a"]).collect())
     assert ts[0].isoformat() == "2024-01-02T03:30:00"
+
+
+def test_run_without_records_keeps_state(spark, tmp_path):
+    """An incremental sync with nothing new (SCHEMA and STATE only) into
+    an output root that does not exist yet: the run writes its metrics
+    and returns the STATE, so the tap's bookmark advances."""
+    out = tmp_path / "not" / "yet"
+    lines = [
+        _msg(type="SCHEMA", stream="s", schema=_schema({"id": {"type": ["integer"]}}),
+             key_properties=["id"]),
+        _msg(type="STATE", value={"bookmark": 7}),
+    ]
+    res = SingerTarget(
+        spark, {"filepath": str(out), "file_naming_scheme": "{stream}"}
+    ).run_strings(lines)
+    assert res["state"] == {"bookmark": 7}
+    assert json.loads((out / "job_metrics.json").read_text()) == {
+        "recordCount": {},
+        "validationViolations": {},
+    }
+
+
+# perfbench's 25-column schema (perfbench/gen.py WIDE_SCHEMA).
+WIDE_SCHEMA = {
+    "type": "object",
+    "properties": {
+        "id": {"type": "integer"},
+        "seq": {"type": ["integer", "null"]},
+        "qty": {"type": ["integer", "null"]},
+        "price": {"type": ["number", "null"], "maximum": 1000},
+        "discount": {"anyOf": [{"type": "number"}, {"type": "null"}]},
+        "flag": {"type": "boolean"},
+        "active": {"type": ["boolean", "null"]},
+        "name": {"type": "string"},
+        "sku": {"type": ["string", "null"], "maxLength": 32},
+        "status": {"type": "string", "enum": ["new", "paid", "shipped", "void"]},
+        "created_at": {"type": "string", "format": "date-time"},
+        "updated_at": {"type": ["string", "null"]},
+        "tags": {"type": ["array", "null"], "items": {"type": "string"}},
+        "attrs": {"type": ["object", "null"]},
+        "nothing": {"type": "null"},
+        "mixed": {"type": ["number", "string"]},
+        "score": {"type": "number"},
+        "units": {"type": "integer"},
+        "note": {"type": ["string", "null"]},
+        "country": {"type": "string"},
+        "lat": {"type": "number"},
+        "lon": {"type": "number"},
+        "is_test": {"type": "boolean"},
+        "ratio": {"type": ["number", "null"]},
+        "ext_id": {"type": "string"},
+    },
+}
+
+
+def test_building_one_version_takes_few_jvm_calls(spark, monkeypatch):
+    """A version's predicate and coercion projection reach the JVM as SQL
+    text, one parse per expression, not one py4j round trip per node."""
+    fields = resolve_schema(WIDE_SCHEMA)
+    assert len(fields) == 25
+    calls = 0
+    real_send = py4j.clientserver.ClientServerConnection.send_command
+    # Only this thread's calls: py4j sends the deletions of collected JVM
+    # objects from its own finalizer thread, and other threads (streaming
+    # callbacks) may talk to the JVM meanwhile.
+    me = threading.get_ident()
+
+    def counting_send(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return real_send(self, *args, **kwargs)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting_send
+    )
+    compile_predicate(
+        WIDE_SCHEMA,
+        source_col="_rec0",
+        raw_json_col="record_json",
+        declared_cols=[f.name for f in fields],
+    )
+    coerce_columns(fields, source_col="_rec")
+    monkeypatch.undo()
+    assert calls <= 100
+
+
+def _three_streams_one_widened():
+    """3 streams; ``b`` is re-declared halfway with ``v`` widened from
+    integer to number and a second key property."""
+    def schema(v_type):
+        return _schema({"id": {"type": ["integer"]}, "v": {"type": [v_type, "null"]}})
+
+    lines = [
+        _msg(type="SCHEMA", stream=s, schema=schema("integer"), key_properties=["id"])
+        for s in "abc"
+    ]
+    for i in range(20):
+        if i == 10:
+            lines.append(_msg(type="SCHEMA", stream="b", schema=schema("number"),
+                              key_properties=["id", "v"]))
+        lines += [
+            _msg(type="RECORD", stream=s, record={"id": i, "v": _v(s, i)}) for s in "abc"
+        ]
+    return lines
+
+
+def _v(stream, i):
+    return i + 0.5 if stream == "b" and i >= 10 else i
+
+
+def test_concurrent_stream_writes(spark, tmp_path):
+    """Streams write concurrently, a stream's versions in order: every
+    row reads back, the key sidecar holds the last version's keys, no
+    committer ``_temporary`` directory is left, and every job of the run
+    lands in the job group the caller set."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"pool-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        res = SingerTarget(
+            spark, {"filepath": str(tmp_path), "file_naming_scheme": "{stream}"}
+        ).run_strings(_three_streams_one_widened())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert len(tracker.getJobIdsForGroup(group)) >= 2 + 4  # collect, aggregate, 4 writes
+    assert res["metrics"]["recordCount"] == {"a": 20, "b": 20, "c": 20}
+    for s in "abc":
+        got = sorted(
+            (r.id, r.v) for r in read_stream_output(spark, res["paths"][s]).collect()
+        )
+        assert got == [(i, _v(s, i)) for i in range(20)]
+    with open(os.path.join(res["paths"]["b"], "_key_properties.json")) as fh:
+        assert json.load(fh) == {"key_properties": ["id", "v"]}
+    assert not [d for d, _, _ in os.walk(tmp_path) if os.path.basename(d) == "_temporary"]

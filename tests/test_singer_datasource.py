@@ -189,7 +189,7 @@ def test_timestamps_match_batch_coercion_on_parity_corpora(spark, tmp_path):
     want = {
         r.id: r.ts
         for r in spark.createDataFrame(list(enumerate(corpus)), "id long, raw string")
-        .select("id", lenient_timestamp(F.col("raw")).alias("ts"))
+        .select("id", lenient_timestamp("raw").alias("ts"))
         .collect()
     }
     for i, s in enumerate(corpus):

@@ -142,6 +142,19 @@ def test_invalid_schema_raises(spark, tmp_out, schema):
         run(spark, tmp_out, lines)
 
 
+def test_string_schema_raises_validation_error(spark, tmp_out):
+    """A JSON string is not a schema: the same contract error as ``5`` or
+    ``[1]``, not a JSON decode error."""
+    lines = [
+        json.dumps(
+            {"type": "SCHEMA", "stream": "broken", "schema": "abc",
+             "key_properties": []}
+        ),
+    ]
+    with pytest.raises(SingerValidationError, match="invalid JSON schema"):
+        run(spark, tmp_out, lines)
+
+
 # --- TargetSchemaUpdates ----------------------------------------------------
 
 

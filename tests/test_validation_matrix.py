@@ -214,6 +214,62 @@ COMPILED_CASES = {
         {"x": [1, 2, 3]},
         {"x": [1, 2, 30]},
     ),
+    # Quoting: the predicate is SQL text, so identifiers, string
+    # literals, regex patterns and numbers must read back exactly.
+    **{
+        f"name-with-{kind}": (
+            {"properties": {name: {"type": "string", "maxLength": 2}}},
+            {name: "ab"},
+            {name: "abc"},
+        )
+        for kind, name in [("dot", "a.b"), ("quote", "it's"),
+                           ("backtick", "a`b"), ("space", "a b")]
+    },
+    "enum-quote-backslash": (
+        {"properties": {"x": {"type": "string", "enum": ["it's", "a\\b"]}}},
+        {"x": "it's"},
+        {"x": "a\\\\b"},
+    ),
+    "enum-backslash": (
+        {"properties": {"x": {"type": "string", "enum": ["it's", "a\\b"]}}},
+        {"x": "a\\b"},
+        {"x": "its"},
+    ),
+    "const-quote-backslash": (
+        {"properties": {"x": {"type": "string", "const": "o'k\\"}}},
+        {"x": "o'k\\"},
+        {"x": "o'k"},
+    ),
+    "pattern-digit-class": (
+        {"properties": {"x": {"type": "string", "pattern": "^\\d{3}$"}}},
+        {"x": "123"},
+        {"x": "12a"},
+    ),
+    "pattern-escaped-backslash": (
+        {"properties": {"x": {"type": "string", "pattern": "^a\\\\b$"}}},
+        {"x": "a\\b"},
+        {"x": "ab"},
+    ),
+    "pattern-quote": (
+        {"properties": {"x": {"type": "string", "pattern": "^it's$"}}},
+        {"x": "it's"},
+        {"x": "its"},
+    ),
+    "maximum-int-above-2^53": (
+        {"properties": {"x": {"type": "integer", "maximum": 2**53 + 1}}},
+        {"x": 2**53 + 1},
+        {"x": 2**53 + 3},
+    ),
+    "minimum-float": (
+        {"properties": {"x": {"type": "number", "minimum": 0.1}}},
+        {"x": 0.1},
+        {"x": 0.09},
+    ),
+    "multipleOf-int-float-value": (
+        {"properties": {"x": {"type": "number", "multipleOf": 4}}},
+        {"x": 12.0},
+        {"x": 12.5},
+    ),
 }
 
 # Keywords the compiled path cannot constrain in THIS addressing mode
@@ -300,6 +356,18 @@ RAW_COMPILED_CASES = {
         {"x": "v", "n_count": 3},
         {"x": "v", "rogue": 1},
     ),
+    # Quoting of undeclared names: they read through get_json_object.
+    **{
+        f"undeclared-name-with-{kind}": (
+            {"properties": {"x": {"type": "string"}},
+             "anyOf": [{"properties": {name: {"maxLength": 2}},
+                        "required": [name]}]},
+            {"x": "v", name: "ab"},
+            {"x": "v", name: "abc"},
+        )
+        for kind, name in [("dot", "a.b"), ("quote", "it's"),
+                           ("backtick", "a`b"), ("space", "a b")]
+    },
 }
 
 
