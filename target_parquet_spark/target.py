@@ -18,8 +18,9 @@ Spark's execution model:
   row, before anything is written.
 - Each non-empty version is then decoded and appended to its stream's
   parquet directory (B1/B2/W1-W4; BUG-4 fixed by version-append +
-  mergeSchema read).  Streams write concurrently, from a small driver
-  thread pool; a stream's versions append in order.
+  mergeSchema read).  Output directories write concurrently, from a
+  small driver thread pool; the versions bound for one directory append
+  in order.
   ``job_metrics.json`` takes its counts from the aggregate and is written
   ONCE per run — the reference rewrote it per record, an O(n²)
   anti-pattern called out in SURVEY §4 (reference writers.py:52-74).
@@ -46,7 +47,7 @@ from __future__ import annotations
 
 import json
 import os
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -370,12 +371,15 @@ class SingerTarget:
         self, routed: DataFrame, plans: list[tuple], got: dict
     ) -> dict:
         """One append per non-empty version; counts come from the
-        aggregate.  Streams write concurrently, one driver thread each,
-        so their small jobs overlap; a stream's versions append in order
-        within its thread, because concurrent appends into one directory
-        collide on the output committer's ``_temporary`` directory and
-        ``_key_properties.json`` must end with the last version's keys.
-        Every stream finishes before the first error, if any, re-raises.
+        aggregate.  Output directories write concurrently, one driver
+        thread each, so their small jobs overlap; the versions bound for
+        one directory append in order within its thread, because
+        concurrent appends into one directory collide on the output
+        committer's ``_temporary`` directory and ``_key_properties.json``
+        must end with the last version's keys.  Streams share a directory
+        when ``file_naming_scheme`` has no ``{stream}``.  Once a task
+        fails, the tasks not yet started are cancelled; those already
+        running finish their appends before the first error re-raises.
 
         A version with zero resolvable columns (SDK "schema with no
         properties" standard test) is counted without writing a
@@ -386,7 +390,7 @@ class SingerTarget:
         reference's pass-through (reference sinks.py:136-139)."""
         counts: dict[str, int] = {}
         violations: dict[str, int] = {}
-        writes: dict[str, list[tuple]] = {}  # stream -> its versions to append
+        writes: dict[str, list[tuple]] = {}  # output directory -> its appends
         quarantine_root = None if self.strict else self.config.get("quarantine_path")
         for i, (stream, v, fields, pred) in enumerate(plans):
             n, bad = got[("n", i)], got.get(("invalid", i), 0)
@@ -394,15 +398,17 @@ class SingerTarget:
                 continue
             if fields:
                 quarantined = bool(quarantine_root and bad)
-                writes.setdefault(stream, []).append((i, v, fields, pred, quarantined))
+                writes.setdefault(self.sink.stream_dir(stream), []).append(
+                    (i, stream, v, fields, pred, quarantined)
+                )
                 if quarantined:
                     n -= bad
             counts[stream] = counts.get(stream, 0) + n
             violations[stream] = violations.get(stream, 0) + bad
         decode = decode_records_exact if self.exact else decode_records_jvm
 
-        def write_stream(stream: str) -> None:
-            for i, v, fields, pred, quarantined in writes[stream]:
+        def append_in_order(appends: list[tuple]) -> None:
+            for i, stream, v, fields, pred, quarantined in appends:
                 records = routed.filter(F.col("_vidx") == i)
                 if quarantined:
                     parsed = records.withColumn(
@@ -414,20 +420,18 @@ class SingerTarget:
                     stream, decode(records, fields), key_properties=v.key_properties
                 )
 
-        for stream in writes:  # the sink's directory map is not thread-safe
-            self.sink.stream_dir(stream)
         workers = min(len(writes), self.spark.sparkContext.defaultParallelism)
-        if workers <= 1:
-            for stream in writes:
-                write_stream(stream)
-        else:
-            # inheritable_thread_target: each thread's jobs carry the
-            # caller's job group and local properties.
-            with ThreadPoolExecutor(workers) as pool:
-                futures = [
-                    pool.submit(inheritable_thread_target(self.spark)(write_stream), s)
-                    for s in writes
-                ]
-            for f in futures:
+        with ThreadPoolExecutor(max(1, workers)) as pool:
+            # inheritable_thread_target: each task's jobs carry a copy of the
+            # caller's local properties (job group included), one per task
+            # since a running SQL execution sets its id in that copy.
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(append_in_order), a)
+                for a in writes.values()
+            ]
+            wait(futures, return_when=FIRST_EXCEPTION)
+            pool.shutdown(cancel_futures=True)
+        for f in futures:
+            if not f.cancelled():
                 f.result()
         return {"recordCount": counts, "validationViolations": violations}

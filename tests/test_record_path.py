@@ -538,3 +538,31 @@ def test_concurrent_stream_writes(spark, tmp_path):
     with open(os.path.join(res["paths"]["b"], "_key_properties.json")) as fh:
         assert json.load(fh) == {"key_properties": ["id", "v"]}
     assert not [d for d, _, _ in os.walk(tmp_path) if os.path.basename(d) == "_temporary"]
+
+
+def test_streams_sharing_one_directory_append_in_turn(spark, tmp_path):
+    """A naming scheme without ``{stream}`` sends every stream to one
+    directory; their appends must not overlap there, or one commit
+    deletes the committer's ``_temporary`` directory under another."""
+    streams = [f"s{k}" for k in range(8)]
+    schema = _schema({"id": {"type": ["integer"]}, "s": {"type": ["string"]}})
+    lines = [
+        _msg(type="SCHEMA", stream=s, schema=schema, key_properties=["id"])
+        for s in streams
+    ]
+    lines += [
+        _msg(type="RECORD", stream=s, record={"id": i, "s": s})
+        for i in range(20)
+        for s in streams
+    ]
+    for attempt in range(3):  # overlapping appends fail only some of the time
+        root = tmp_path / str(attempt)
+        res = SingerTarget(
+            spark, {"filepath": str(root), "file_naming_scheme": "out-{timestamp}"}
+        ).run_strings(lines)
+        assert len(set(res["paths"].values())) == 1
+        out = read_stream_output(spark, res["paths"]["s0"])
+        assert sorted((r.s, r.id) for r in out.collect()) == [
+            (s, i) for s in streams for i in range(20)
+        ]
+        assert not [d for d, _, _ in os.walk(root) if os.path.basename(d) == "_temporary"]
