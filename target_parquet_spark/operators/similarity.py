@@ -18,6 +18,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from target_parquet_spark import sql_text
+
 __all__ = [
     "knn_graph",
     "knn_graph_quantized",
@@ -233,11 +235,11 @@ def ivf_codebook(
     the query path is unchanged).  Returns (cid, vector, norm) with the
     norm computed as the same sequential fold the executors use — bit-for-
     bit reproducible in DuckDB."""
-    rows = (
-        corpus.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
+    # at most n_centroids rows: sorted here, not by a range sort that
+    # samples its input in a job of its own
+    rows = sorted(
+        corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).collect(),
+        key=lambda r: r[0],
     )
     if not rows:
         raise ValueError(
@@ -567,15 +569,20 @@ def ivf_cell(vec: Column, codebook: list[tuple[int, list[float], float]]) -> Col
     ``transform`` (one dot-fold per centroid, same sequential arithmetic)
     zip_with'd against the literal norm vector; cell = argmax of the
     norm-scaled score (ties -> lowest cid, via first-position semantics of
-    array_position).  Requires cid == list index.  The single-Literal form
-    keeps driver-side plan analysis flat in n_centroids*dim (measured
-    3.6s -> 1.7s at sf0.1 where 2000 rows make compile time dominate)."""
+    array_position).  A zero-norm centroid has no direction and scores
+    0.0, as in :func:`ivf_probe_cells`.  Requires cid == list index.  The
+    single-Literal form keeps driver-side plan analysis flat in
+    n_centroids*dim (measured 3.6s -> 1.7s at sf0.1 where 2000 rows make
+    compile time dominate); the matrix and the norms reach the JVM as SQL
+    text, one parse each, not one py4j round trip per element."""
     if [c[0] for c in codebook] != list(range(len(codebook))):
         raise ValueError("ivf_cell: codebook cids must equal list indices")
-    mat = F.lit([cv for _cid, cv, _nrm in codebook])
-    norms = F.lit([nrm for _cid, _cv, nrm in codebook])
+    mat = F.expr(sql_text.double_array([cv for _cid, cv, _nrm in codebook]))
+    norms = F.expr(sql_text.double_array([nrm for _cid, _cv, nrm in codebook]))
     scores = F.zip_with(
-        F.transform(mat, lambda cv: dot(vec, cv)), norms, lambda s, n: s / n
+        F.transform(mat, lambda cv: dot(vec, cv)),
+        norms,
+        lambda s, n: F.when(n == 0.0, F.lit(0.0)).otherwise(s / n),
     )
     return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
@@ -587,13 +594,14 @@ def ivf_probe_cells(
 ) -> list[int]:
     """Driver-side probe selection: the ``nprobe`` cells whose centroids
     score highest against the query — the same arithmetic the executors'
-    fold uses for assignment, so probing and assignment agree."""
+    fold uses for assignment (a zero-norm centroid scores 0.0 in both), so
+    probing and assignment agree."""
     cell_scores = []
     for cid, cv, nrm in codebook:
         d = 0.0
         for a, b in zip(query_vec, cv):
             d += a * b
-        cell_scores.append((-(d / nrm), cid))
+        cell_scores.append((-(d / nrm) if nrm else 0.0, cid))
     return [cid for _neg, cid in sorted(cell_scores)[:nprobe]]
 
 
@@ -622,7 +630,7 @@ def ivf_ann(
     qnorm = math.sqrt(s)
     probe = ivf_probe_cells(qv, codebook, nprobe)
 
-    qlit = F.array(*[F.lit(x) for x in qv])
+    qlit = F.expr(sql_text.double_array(qv))
     dim = len(qv)
     assigned = corpus.withColumn("cell", ivf_cell(F.col(vec_col), codebook))
     return (

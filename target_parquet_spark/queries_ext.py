@@ -58,8 +58,10 @@ def td(spark, sf_dir, name):
     execution.  On a real cluster the scan is already wide (many files)
     and this guard makes it a no-op.  The width probe uses inputFiles()
     rather than df.rdd.getNumPartitions(): the first .rdd conversion in a
-    session costs ~3s of Py4J/serde init, the file listing is already
-    cached by the scan's FileIndex."""
+    session costs ~3s of Py4J/serde init, while inputFiles() reads the
+    listing the relation's FileIndex holds.  That listing is made once
+    per relation, and ``t`` hands out one relation per session while the
+    table's files are unchanged, so a repeated call lists nothing."""
     df = t(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
     if len(df.inputFiles()) < target:
@@ -963,13 +965,17 @@ def sim_ann_ivf(spark, sf_dir):
     seam), per-row literal-argmax cell assignment — zero shuffle, zero
     join — then exact cosine in the query's 2 probed cells.  At 100 TB the
     cell is the partition key and probing prunes the scan to nprobe/16.
-    Oracle reproduces assignment + probe with identical fold arithmetic."""
-    emb = td(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codebook = S.ivf_codebook(emb, n_centroids=16)
+    Oracle reproduces assignment + probe with identical fold arithmetic.
+    The codebook and the query vector are collected from t()'s base
+    relation: through td()'s round-robin repartition, picking those few
+    rows would shuffle the whole table.  Only the scored scan uses td()."""
+    base = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    codebook = S.ivf_codebook(base, n_centroids=16)
     qv = [
         float(x)
-        for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
+        for x in base.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
     ]
+    emb = td(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return S.ivf_ann(emb, qv, codebook, nprobe=2, threshold=0.1)
 
 

@@ -59,6 +59,14 @@ def get_spark(
         # A/B (min-of-4/arm, sf0.1): quantized kNN 4.91->4.22 / fixed
         # 4.37->3.66, minhash pairs 5.28->4.03, ngram jaccard
         # 4.12->3.74, anchors unchanged.
+        # The trade-off is skew: the setting is session-wide, so a join
+        # whose children are partitioned on a low-cardinality subset of
+        # its keys keeps that coarse partitioning instead of being
+        # re-shuffled on all keys, and a hot subset value lands in one
+        # task.  Only AQE's skew-join split (enabled above) bounds that
+        # task, and it applies only to a sort-merge or shuffled-hash join
+        # that reads a shuffle on each side, not to every operator that
+        # inherits the coarse partitioning.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # Runtime bloom-filter join pruning: when one join side is
         # selectively filtered, inject a bloom filter of its keys into the
@@ -68,6 +76,13 @@ def get_spark(
         .config("spark.sql.optimizer.runtimeFilter.bloomFilter.enabled", "true")
         # Arrow transfer for the pandas-UDF slow paths.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Generated-class cache sized to the working set.  One pass over
+        # the perfbench query_mix needs 149 distinct generated classes;
+        # at Spark's default of 100 entries the LRU misses on every class
+        # of that cyclic set, so each warm pass re-ran 142 Janino
+        # compilations (about 10 ms each).  At 1000 a warm pass compiles
+        # none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Let HotSpot JIT long generated methods.  The unrolled
         # fixed-width dot products (operators/similarity.dot with
         # dim=...) emit one ~64-term arithmetic chain per call; the

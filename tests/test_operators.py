@@ -96,6 +96,27 @@ def test_ivf_cell_assignment_and_probe(spark):
     assert sims[10] == 1.0  # identical direction
 
 
+def test_ivf_zero_norm_centroid(spark):
+    """An all-zero seed vector is a centroid with no direction: it scores
+    0.0 in the executors' assignment and in the driver's probe, so both
+    agree and neither divides by zero."""
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cb = S.ivf_codebook(df, n_centroids=4)
+    assert cb[0][2] == 0.0
+    cells = {
+        r.vec_id: r.cell
+        for r in df.select(
+            "vec_id", S.ivf_cell(F.col("embedding"), cb).alias("cell")
+        ).collect()
+    }
+    assert cells == {0: 0, 1: 1, 2: 2, 3: 3}
+    for vid, vec in rows:
+        assert S.ivf_probe_cells(vec, cb, 1) == [cells[vid]]
+    got = S.ivf_ann(df, [1.0, 0.0], cb, nprobe=1, threshold=-1.0).collect()
+    assert [(r.vec_id, r.cell, r.sim) for r in got] == [(1, 1, 1.0)]
+
+
 def test_simhash_identical_docs_same_fp(spark, docs):
     fp = {
         r.doc_id: r.simhash
