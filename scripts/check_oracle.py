@@ -84,6 +84,9 @@ def main():
         "samples the first 50 — this replicates exactly that prefix)",
     )
     args = ap.parse_args()
+    # one line per query, flushed as it prints: a stopped sweep that was
+    # redirected to a file keeps every result printed so far
+    sys.stdout.reconfigure(line_buffering=True)
 
     import duckdb
 

@@ -21,7 +21,8 @@ same resolution as the schema path, fixing reference BUG-3):
 - C10 empty-string -> null for non-string targets (reference sinks.py:87-88).
 - C4  number: ``try_cast(double)``  (reference float(), sinks.py:90-91;
       unparseable values become null instead of crashing the pipe).
-- C5  integer: ``try_cast(long)``  (reference int(), sinks.py:93-94).
+- C5  integer: ``try_cast(long)``, else an integral decimal (``7.0``)
+      that fits a long  (reference int(), sinks.py:93-94).
 - C6/C11 date-time: one dateutil-grade grammar (``lenient_timestamp``: a
       zone-abbreviation lookup, the ISO cast, then six optional-section
       patterns over a once-cleaned string), malformed -> NULL
@@ -53,9 +54,9 @@ __all__ = ["coerce_expr", "coerce_columns", "lenient_timestamp"]
 
 # dateutil resolves a zone abbreviation only through an explicit
 # ``tzinfos=`` map, and THIS dict is that map's single source of truth:
-# the ``singer`` data source and the parity tests hand the same dict (in
-# seconds) to dateutil, so the engines agree by construction.  UTC/GMT are
-# absent because both engines resolve them unaided.  Ambiguous
+# the parity tests hand the same dict (in seconds) to dateutil, so
+# dateutil and lenient_timestamp agree by construction.  UTC/GMT are
+# absent because both resolve them unaided.  Ambiguous
 # abbreviations (CST, IST) take the offset recorded here.
 TZ_ABBREV_OFFSETS = {
     "EST": "-05:00", "EDT": "-04:00",
@@ -175,8 +176,16 @@ def coerce_expr(raw: str, rf: ResolvedField) -> str:
         parsed = f"try_cast({raw} AS DOUBLE)"
     elif rf.type_id == "integer":
         # Spark's string->long cast rejects "3.2" (→ null) just as Python
-        # int() raises; unlike the reference, the pipe survives.
-        parsed = f"try_cast({raw} AS BIGINT)"
+        # int() raises; unlike the reference, the pipe survives.  An
+        # integral JSON number spelled as a float (7.0, 1e2, -0.0) is an
+        # integer to JSON Schema and to the reference's int(7.0), so it
+        # falls back to the exact decimal when that has no fraction and
+        # fits a long.
+        dec = f"try_cast({raw} AS DECIMAL(38,18))"
+        parsed = (
+            f"coalesce(try_cast({raw} AS BIGINT), "
+            f"CASE WHEN {dec} = floor({dec}) THEN try_cast({dec} AS BIGINT) END)"
+        )
     elif rf.type_id == "boolean":
         parsed = f"try_cast({raw} AS BOOLEAN)"
     else:

@@ -1605,9 +1605,9 @@ def scan_jsonl_source(spark, sf_dir):
     scan_csv_source through Spark's json writer/reader (one JSON object
     per line, \\n and unicode escaped by the writer).  JSONL splits by
     line, so unlike multiLine CSV the scan parallelizes within files;
-    explicit schema skips inference.  Together with the Singer
-    DataSource (spark.read.format("singer")) and parquet this completes
-    the source-format matrix."""
+    explicit schema skips inference.  Together with Singer files
+    (SingerTarget.read_records) and parquet this completes the
+    source-format matrix."""
     return _docs_checksum(_roundtrip_artifact(spark, sf_dir, "json"))
 
 

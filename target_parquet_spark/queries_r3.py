@@ -2267,7 +2267,9 @@ def events_multitouch_attribution(spark, sf_dir):
     dashboard headlines."""
     e = t(spark, sf_dir, "events")
     c = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("c_ts")
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("c_user_id"),
+        F.col("ts").alias("c_ts"),
     )
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -2277,7 +2279,7 @@ def events_multitouch_attribution(spark, sf_dir):
     )
     touch = p.join(
         c,
-        (p.user_id == c.user_id)
+        (F.col("user_id") == F.col("c_user_id"))
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") > F.col("p_ts") - F.expr("INTERVAL 24 HOURS")),
     ).select("purchase_id", "value", "click_id")
@@ -3780,7 +3782,9 @@ def events_first_touch_attribution(spark, sf_dir):
     by purchase — no second join, same single key shuffle."""
     e = t(spark, sf_dir, "events")
     c = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("c_ts")
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("c_user_id"),
+        F.col("ts").alias("c_ts"),
     )
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -3790,7 +3794,7 @@ def events_first_touch_attribution(spark, sf_dir):
     )
     touch = p.join(
         c,
-        (p.user_id == c.user_id)
+        (F.col("user_id") == F.col("c_user_id"))
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") > F.col("p_ts") - F.expr("INTERVAL 24 HOURS")),
     )

@@ -38,17 +38,20 @@ columns are counted the same way — strict rejects, lenient writes a
 readable file with nulls.
 
 This is the one record pipeline: ``SingerTarget.run_lines`` runs it over a
-whole input, and the streaming target (streaming/singer_stream.py) runs it
+whole input, the streaming target (streaming/singer_stream.py) runs it
 over each micro-batch with the stream versions carried in from earlier
-batches.
+batches, and ``SingerTarget.read_records`` runs its plan half over Singer
+files and returns one stream's decoded records without writing them.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
@@ -117,7 +120,7 @@ def _route(plans: list[tuple]) -> Column:
     ``_pos`` range holds it.  Null for any other message and for an
     orphan RECORD.  This is the only statement of the routing rule."""
     vidx = None
-    for i, (stream, v, _, _) in enumerate(plans):
+    for i, (stream, v, _) in enumerate(plans):
         cond = F.col("stream") == stream
         if v.pos is not None:
             cond = cond & (F.col("_pos") > position_literal(v.pos))
@@ -177,31 +180,84 @@ class SingerTarget:
             "paths": {s: self.sink.stream_dir(s) for s in versions},
         }
 
+    def read_records(self, path: str, stream: str | None = None) -> DataFrame:
+        """The typed records of ``stream`` in the Singer files at ``path``
+        (a file, a glob, or a directory read recursively), as the target
+        would write them: each SCHEMA version's RECORDs routed and decoded
+        by the record pipeline, the versions' decodes joined by
+        ``unionByName`` -- what ``read_stream_output`` reads back from a
+        run over the same input.  ``stream`` defaults to the first SCHEMA's
+        stream.  Uncommitted ``*.pending`` shards are not read, and a
+        RECORD that no SCHEMA governs is left out.
+
+        Only the SCHEMA collect runs here; the result is a lazy DataFrame
+        over the files: each version's branch re-scans them, and the line
+        ids in ``_pos`` are recomputed on every scan, so a routing is
+        stable only while the files do not change."""
+        try:
+            lines = self.spark.read.option("recursiveFileLookup", "true").text(path)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            raise FileNotFoundError(f"singer source: no files match {path!r}") from e
+        lines = with_input_file(lines).filter(~F.col("_file").endswith(".pending"))
+        versions, _, plans, routed = self._plan(parse_envelope(lines))
+        if stream is None:
+            stream = next(iter(versions), None)
+        decoded = [
+            self._decode(routed.filter(F.col("_vidx") == i), fields)
+            for i, (s, _, fields) in enumerate(plans)
+            if s == stream and fields
+        ]
+        if not decoded:
+            raise SingerValidationError(
+                f"{path!r}: no SCHEMA message declares columns for stream {stream!r}"
+            )
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), decoded
+        )
+
+    def _plan(self, env: DataFrame, carried: dict | None = None):
+        """The plan half of the record pipeline over a parsed envelope:
+        SCHEMA versions, per-stream widening, each version's resolved
+        columns, and each RECORD's version index ``_vidx``.  Returns
+        (versions, widened columns per stream, plans, routed envelope);
+        ``plans`` holds (stream, version, fields), indexed by ``_vidx``."""
+        versions = self._collect_schemas(env, carried)
+        widened = {s: self._widen(s, vs) for s, vs in versions.items()}
+        plans = [
+            (stream, v, self._fields(stream, v.schema, widened[stream]))
+            for stream, vers in versions.items()
+            for v in vers
+        ]
+        return versions, widened, plans, env.withColumn("_vidx", _route(plans))
+
+    def _decode(self, records: DataFrame, fields: list[ResolvedField]) -> DataFrame:
+        decode = decode_records_exact if self.exact else decode_records_jvm
+        return decode(records, fields)
+
     def _ingest(self, lines: DataFrame, carried: dict | None = None):
-        """The record pipeline over one input: SCHEMA versions, per-stream
-        widening, the pre-write aggregate and its checks, then the writes.
-        ``carried`` maps a stream to the (schema, key_properties) that
-        governs its RECORDs before any SCHEMA in ``lines``.  Returns
-        (versions, widened columns per stream, state, metrics)."""
+        """The record pipeline over one input: the plan half, each
+        version's validation predicate, the pre-write aggregate and its
+        checks, then the writes.  ``carried`` maps a stream to the
+        (schema, key_properties) that governs its RECORDs before any
+        SCHEMA in ``lines``.  Returns (versions, widened columns per
+        stream, state, metrics)."""
         env = parse_envelope(lines)
         env.cache()  # scanned by the SCHEMA collect, the aggregate and each write
         try:
-            versions = self._collect_schemas(env, carried)
-            widened = {s: self._widen(s, vs) for s, vs in versions.items()}
-            plans = []  # (stream, version, fields, predicate), indexed by _vidx
-            for stream, vers in versions.items():
-                for v in vers:
-                    fields = self._fields(stream, v.schema, widened[stream])
-                    pred = compile_predicate(
-                        v.schema,
-                        source_col=f"_rec{len(plans)}",
-                        raw_json_col="record_json",
-                        declared_cols=[f.name for f in fields],
-                        ref_base_dir=self.ref_base_dir,
-                        ref_registry=self.ref_registry,
-                    )
-                    plans.append((stream, v, fields, pred))
-            routed = env.withColumn("_vidx", _route(plans))
+            versions, widened, plans, routed = self._plan(env, carried)
+            plans = [  # (stream, version, fields, predicate)
+                (stream, v, fields, compile_predicate(
+                    v.schema,
+                    source_col=f"_rec{i}",
+                    raw_json_col="record_json",
+                    declared_cols=[f.name for f in fields],
+                    ref_base_dir=self.ref_base_dir,
+                    ref_registry=self.ref_registry,
+                ))
+                for i, (stream, v, fields) in enumerate(plans)
+            ]
             got = self._aggregate(routed, plans)
             self._check(plans, got)
             state = json.loads(got["state"]) if got["state"] else None
@@ -405,7 +461,6 @@ class SingerTarget:
                     n -= bad
             counts[stream] = counts.get(stream, 0) + n
             violations[stream] = violations.get(stream, 0) + bad
-        decode = decode_records_exact if self.exact else decode_records_jvm
 
         def append_in_order(appends: list[tuple]) -> None:
             for i, stream, v, fields, pred, quarantined in appends:
@@ -417,7 +472,7 @@ class SingerTarget:
                     )
                     records = quarantine_invalid(parsed, pred, stream, quarantine_root)
                 self.sink.write(
-                    stream, decode(records, fields), key_properties=v.key_properties
+                    stream, self._decode(records, fields), key_properties=v.key_properties
                 )
 
         workers = min(len(writes), self.spark.sparkContext.defaultParallelism)

@@ -132,6 +132,29 @@ def test_mid_batch_redeclaration_routes_records_by_version(spark, tmp_path, conf
     assert metrics == {"recordCount": {"s": 2}, "validationViolations": {"s": 0}}
 
 
+def test_integral_json_number_in_integer_column(spark, tmp_path):
+    """An integral JSON number written as a float (7.0, 1e2, -0.0) is an
+    integer to JSON Schema and to the reference's int(); it decodes to
+    that long.  A fraction, a string with a fraction and a number out of
+    long range still repair to NULL."""
+    lines = [
+        _msg(type="SCHEMA", stream="s", key_properties=["id"],
+             schema=_schema({"id": {"type": ["integer"]},
+                             "n": {"type": ["integer", "null"]}})),
+    ] + [
+        _msg(type="RECORD", stream="s", record={"id": i, "n": n})
+        for i, n in enumerate([7.0, 1e2, -0.0, 7.9, "3.2", 1e30, 42, "42"])
+    ]
+    out = tmp_path / "out"
+    res = SingerTarget(
+        spark, {"filepath": str(out), "file_naming_scheme": "{stream}"}
+    ).run_strings([l.replace("100.0", "1e2") for l in lines])
+    # 7.9, "3.2" and "42" fail validation; the integral floats pass it
+    assert res["metrics"]["validationViolations"] == {"s": 3}
+    got = {r.id: r.n for r in read_stream_output(spark, str(out / "s")).collect()}
+    assert got == {0: 7, 1: 100, 2: 0, 3: None, 4: None, 5: None, 6: 42, 7: 42}
+
+
 def test_strict_null_in_non_nullable_column_fails_both(spark, tmp_path):
     """Strict mode rejects a null in a non-nullable column (the record
     omits it, which the JSON schema itself allows) before writing."""

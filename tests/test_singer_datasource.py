@@ -1,5 +1,6 @@
-"""Tests for the Spark 4 Python DataSource wrapping Singer JSONL
-(``spark.read.format("singer")``)."""
+"""Tests for Singer JSONL files: the Spark 4 Python DataSource writer
+(``df.write.format("singer")``) and reads through
+``SingerTarget.read_records``."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import json
 import pytest
 
 from target_parquet_spark.io.singer_datasource import SingerDataSource
+from target_parquet_spark.target import SingerTarget
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -53,7 +55,7 @@ def test_reads_typed_records_across_files(spark, tmp_path):
             + [json.dumps({"type": "STATE", "value": {}})]
         )
     )
-    df = spark.read.format("singer").load(f"{tmp_path}/*.jsonl")
+    df = SingerTarget(spark).read_records(f"{tmp_path}/*.jsonl")
     assert [f.name for f in df.schema.fields] == ["id", "v", "name", "ts"]
     assert dict(df.dtypes)["ts"] == "timestamp"
     rows = {r.id: r for r in df.collect()}
@@ -78,12 +80,12 @@ def test_stream_option_filters_and_schema_follows(spark, tmp_path):
         )
     )
     users = (
-        spark.read.format("singer").option("stream", "users").load(str(p))
+        SingerTarget(spark).read_records(str(p), "users")
     )
     assert [f.name for f in users.schema.fields] == ["uid"]
     assert sorted(r.uid for r in users.collect()) == [1, 2]
     events = (
-        spark.read.format("singer").option("stream", "events").load(str(p))
+        SingerTarget(spark).read_records(str(p), "events")
     )
     assert sorted(r.eid for r in events.collect()) == [100]
 
@@ -113,7 +115,7 @@ def test_repair_semantics_match_engine_contract(spark, tmp_path):
             ]
         )
     )
-    rows = {r.id: r for r in spark.read.format("singer").load(str(p)).collect()}
+    rows = {r.id: r for r in SingerTarget(spark).read_records(str(p)).collect()}
     assert len(rows) == 2
     assert rows[1].v is None and rows[1].ts is None
     assert json.loads(rows[1].meta) == {"a": 1, "b": 2}
@@ -124,7 +126,7 @@ def test_missing_schema_message_raises(spark, tmp_path):
     p = tmp_path / "m.jsonl"
     p.write_text(_record("s", id=1))
     with pytest.raises(Exception):
-        spark.read.format("singer").load(str(p)).collect()
+        SingerTarget(spark).read_records(str(p)).collect()
 
 
 def test_converter_parity_with_batch_coercion(spark, tmp_path):
@@ -153,7 +155,7 @@ def test_converter_parity_with_batch_coercion(spark, tmp_path):
             ]
         )
     )
-    rows = {r.id: r for r in spark.read.format("singer").load(str(p)).collect()}
+    rows = {r.id: r for r in SingerTarget(spark).read_records(str(p)).collect()}
     assert rows[1].n is None          # "3.2" repairs, never truncates
     assert rows[1].b is False         # "false" is False, not bool("false")
     assert rows[1].ts.microsecond == 123000  # ms truncation (sink parity)
@@ -185,7 +187,7 @@ def test_timestamps_match_batch_coercion_on_parity_corpora(spark, tmp_path):
             [_schema_msg()] + [_record("s", id=i, ts=s) for i, s in enumerate(corpus)]
         )
     )
-    got = {r.id: r.ts for r in spark.read.format("singer").load(str(p)).collect()}
+    got = {r.id: r.ts for r in SingerTarget(spark).read_records(str(p)).collect()}
     want = {
         r.id: r.ts
         for r in spark.createDataFrame(list(enumerate(corpus)), "id long, raw string")
@@ -199,7 +201,7 @@ def test_timestamps_match_batch_coercion_on_parity_corpora(spark, tmp_path):
 
 def test_unmatched_glob_raises_clear_error(spark, tmp_path):
     with pytest.raises(Exception, match="no files match"):
-        spark.read.format("singer").load(f"{tmp_path}/nothing-*.jsonl")
+        SingerTarget(spark).read_records(f"{tmp_path}/nothing-*.jsonl")
 
 
 def test_writer_pending_staging_and_manifest_merge(spark, tmp_path):
@@ -221,7 +223,7 @@ def test_writer_pending_staging_and_manifest_merge(spark, tmp_path):
         "append"
     ).save(out)
 
-    back = spark.read.format("singer").load(out)
+    back = SingerTarget(spark).read_records(out)
     assert sorted(r.id for r in back.collect()) == [1, 2]  # 99 invisible
     manifest = open(f"{out}/_SUCCESS").read().strip().splitlines()
     assert len(manifest) == 2  # both jobs' shards named
@@ -251,7 +253,7 @@ def test_writer_nan_inf_repair_and_utc_offset(spark, tmp_path):
         json.loads(line)  # also rejects bare NaN/Infinity tokens? no -- check below
     assert "Infinity" not in "".join(lines) and "NaN" not in "".join(lines)
     assert "+00:00" in "".join(lines)
-    back = {r.id: r for r in spark.read.format("singer").load(out).collect()}
+    back = {r.id: r for r in SingerTarget(spark).read_records(out).collect()}
     assert back[1].v is None and back[2].v is None
 
 
@@ -286,7 +288,7 @@ def test_write_round_trip(spark, tmp_path):
         first = open(f"{out}/{s}").readline()
         assert json.loads(first)["type"] == "SCHEMA"
 
-    back = spark.read.format("singer").load(f"{out}/*.jsonl")
+    back = SingerTarget(spark).read_records(f"{out}/*.jsonl")
     got = {r.id: r for r in back.collect()}
     assert dict(back.dtypes) == dict(src.dtypes)
     assert got[1].v == 1.5 and got[1].ok is True
@@ -321,7 +323,40 @@ def test_converter_special_numeric_spellings(spark, tmp_path):
             ]
         )
     )
-    rows = {r.id: r for r in spark.read.format("singer").load(str(p)).collect()}
+    rows = {r.id: r for r in SingerTarget(spark).read_records(str(p)).collect()}
     assert rows[1].v == float("inf") and rows[1].b is None
     assert math.isnan(rows[2].v) and rows[2].b is True
     assert rows[3].v == float("inf")
+
+
+def test_redeclared_stream_reads_as_the_target_writes(spark, tmp_path):
+    """A stream re-declared with ``v`` widened from integer to number and
+    a new column ``w`` reads back through ``read_records`` exactly as the
+    target writes it: ``v double``, ``w string``, each RECORD decoded
+    under the version that governs it."""
+    from target_parquet_spark.io.parquet_sink import read_stream_output
+
+    p = tmp_path / "m.jsonl"
+    p.write_text(
+        "\n".join(
+            [
+                _schema_msg("s", {"id": {"type": ["integer", "null"]},
+                                  "v": {"type": ["integer", "null"]}}),
+                _record("s", id=1, v=2),
+                _schema_msg("s", {"id": {"type": ["integer", "null"]},
+                                  "v": {"type": ["number", "null"]},
+                                  "w": {"type": ["string", "null"]}}),
+                _record("s", id=2, v=2.5, w="x"),
+            ]
+        )
+    )
+    out = tmp_path / "out"
+    SingerTarget(
+        spark, {"filepath": str(out), "file_naming_scheme": "{stream}"}
+    ).run_path(str(p))
+    written = read_stream_output(spark, str(out / "s"))
+    read = SingerTarget(spark).read_records(str(p))
+    assert read.dtypes == written.dtypes
+    assert dict(read.dtypes) == {"id": "bigint", "v": "double", "w": "string"}
+    assert sorted(read.collect()) == sorted(written.collect())
+    assert sorted(tuple(r) for r in read.collect()) == [(1, 2.0, None), (2, 2.5, "x")]
