@@ -88,15 +88,6 @@ class ParquetStreamSink:
             )
         return path
 
-    def row_count(self, stream: str) -> int:
-        """Metadata-only count from parquet footers (no data scan)."""
-        import pyarrow.dataset as ds
-
-        path = self._dirs.get(stream)
-        if not path or not os.path.isdir(path):
-            return 0
-        return ds.dataset(path, format="parquet").count_rows()
-
 
 def read_stream_output(spark, path: str) -> DataFrame:
     """Read-back contract for evolved streams: mergeSchema on."""

@@ -135,6 +135,9 @@ def decode_records_jvm(records: DataFrame, fields: list[ResolvedField]) -> DataF
 # ---------------------------------------------------------------------------
 
 
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
+
+
 def _parse_value_exact(value, rf: ResolvedField):
     """Python-semantics coercion of one already-json.loads'ed value.
 
@@ -142,6 +145,11 @@ def _parse_value_exact(value, rf: ResolvedField):
     with the lenient/bug-fixed policies of SURVEY §2.11: unparseable
     numerics/datetimes -> null instead of crashing, and the fuzzy-type
     resolution matches the schema path (BUG-3 fix).
+
+    An integer column takes ``int(value)`` as the reference does, so a
+    JSON ``7.9`` decodes to 7 (the JVM path writes NULL); reference
+    parity is what exact_compat is for.  A value outside the int64 range
+    (``1e30``) is NULL, as on the JVM path: it cannot be stored.
     """
     if value is None:
         return None
@@ -155,7 +163,8 @@ def _parse_value_exact(value, rf: ResolvedField):
         if rf.type_id == "number":
             return float(value)
         if rf.type_id == "integer":
-            return int(value)
+            n = int(value)
+            return n if _INT64_MIN <= n <= _INT64_MAX else None
         if rf.type_id == "boolean":
             if isinstance(value, bool):
                 return value

@@ -1,4 +1,4 @@
-"""Lineage truncation for reused small intermediates.
+"""Lineage truncation: the one place that decides how a plan is cut.
 
 Round-10 plan audit: every query that referenced a derived table more
 than once was *re-executing its whole pipeline per reference*, because
@@ -14,7 +14,15 @@ after 3 hops).
 `localCheckpoint` §5): compile the subtree once, compute it once on
 first use, and hand every consumer a `LogicalRDD` scan of the stored
 blocks.  Values are bit-identical — the same deterministic plan runs,
-just once instead of N times.
+just once instead of N times.  ``cut()`` is the same truncation for
+iterative loops (graph ranks, label propagation, frontier expansion),
+where the cut is what keeps the plan from growing every round.
+
+Policy: a cut is a reliable ``checkpoint`` exactly when the session's
+SparkContext has a checkpoint directory, and a ``localCheckpoint``
+otherwise.  The directory is a property of the deployment, set through
+Spark's own path (the launch conf ``spark.checkpoint.dir`` or
+``sc.setCheckpointDir``); no operator or query decides it per call.
 
 Scale posture — two classes of cut site:
 
@@ -30,28 +38,14 @@ Scale posture — two classes of cut site:
   query).  At 100 TB a localCheckpoint of a corpus-sized table pins
   roughly the full derived corpus in NON-fault-tolerant executor
   MEMORY_AND_DISK storage: a lost executor kills the job (the lineage
-  is gone).  On a real cluster either set
-  ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` (routes these cuts through
-  replayable reliable checkpoints — same semantics, survives executor
-  loss) or accept the recompute and skip the cut
-  (``SPARK_GRAFT_NO_MAT=1``); the env knobs exist precisely so this is
-  a deploy-time decision, not a code change.
+  is gone).  A cluster deployment therefore sets ``spark.checkpoint.dir``
+  (a shared filesystem path): every cut then goes through a replayable
+  reliable checkpoint — same values, survives executor loss, one extra
+  write and read per cut.
 
 Local checkpoints live in executor storage (MEMORY_AND_DISK) and die
 with the session — nothing is persisted across runs, and every
 invocation recomputes from the parquet inputs.
-
-On a real cluster note: `localCheckpoint` trades fault-tolerance for
-speed (a lost executor loses its blocks and the lineage is gone).  For
-a long 100 TB job, flip the reliable flag below to route through
-`spark.sparkContext.setCheckpointDir` + `checkpoint()` instead — same
-semantics, replayable blocks.
-
-Relationship to ``operators.dedup.lineage_cut``: that helper is the
-EAGER twin used inside convergence loops (each round's cut is computed
-before the round's fixpoint action reads it — the job boundary is the
-point).  ``mat`` is lazy: construction stays job-free, so EXPLAIN-only
-paths (scripts/explain.py, catalog listings) never execute a scan.
 """
 
 from __future__ import annotations
@@ -60,18 +54,28 @@ import os
 
 from pyspark.sql import DataFrame
 
-#: Scale-dependent knob (conf/env, local default): reliable checkpoints
-#: require a checkpoint dir and an extra write+read, worth it only when
-#: executor loss is a real event (cluster), never in local mode.
-_RELIABLE = os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT", "") == "1"
+
+def cut(df: DataFrame, eager: bool) -> DataFrame:
+    """Truncate ``df``'s lineage: a reliable ``checkpoint`` when the
+    session has a checkpoint directory, a ``localCheckpoint`` otherwise.
+
+    ``eager=True`` computes the blocks now — the form convergence loops
+    use, where each round's cut must exist before the round's fixpoint
+    action reads it.  ``eager=False`` defers the computation to the
+    first action that touches the result.  No test bypass: the loops
+    need their cuts to keep the plan from growing every round."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def mat(df: DataFrame) -> DataFrame:
     """Materialize a reused intermediate: compute once, scan many times.
 
-    Lazy (`eager=False`): the plan is compiled now, the blocks are
-    computed by the first action that touches the result — construction
-    stays job-free, matching the bench's timed region.
+    Lazy (``cut(df, eager=False)``): the plan is compiled now, the blocks
+    are computed by the first action that touches the result —
+    construction stays job-free, so EXPLAIN-only paths (scripts/explain.py,
+    catalog listings) never execute a scan.
 
     ``SPARK_GRAFT_NO_MAT=1`` (read at call time) bypasses the cut and
     returns ``df`` unchanged: a checkpoint replaces the subtree with a
@@ -82,6 +86,4 @@ def mat(df: DataFrame) -> DataFrame:
     """
     if os.environ.get("SPARK_GRAFT_NO_MAT", "") == "1":
         return df
-    if _RELIABLE:
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+    return cut(df, eager=False)

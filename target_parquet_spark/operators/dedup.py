@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from target_parquet_spark.operators.text import hash60, shingles, tokens
 
 __all__ = [
-    "lineage_cut",
     "lsh_band_index",
     "streaming_near_dup",
     "exact_dedup",
@@ -83,22 +82,11 @@ def duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def lineage_cut(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Cut iterative lineage: ``localCheckpoint`` by default (fast, block
-    replicas on executors), or a RELIABLE ``checkpoint`` when a directory
-    is given — survives executor loss, the right mode for long cluster
-    runs (VERDICT r2 #8).  Callers set the dir once per operator call."""
-    if checkpoint_dir is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Distributed connected components over an undirected edge list —
     the transitive-closure step that turns near-dup PAIRS into dup GROUPS
@@ -118,10 +106,12 @@ def connected_components(
 
     Scale notes: all joins and aggs key on the node id, so the shuffles
     share one hash partitioning; per-round state is 2 longs per
-    edge-incident node.  Each round ends in a lineage cut (re-planning an
-    iterative chain grows superlinearly otherwise): ``localCheckpoint``
-    by default, or a reliable ``checkpoint`` into ``checkpoint_dir`` for
-    executor-loss safety on long cluster runs.  Dup graphs converge in
+    edge-incident node.  Each round ends in a lazy lineage cut
+    (``lineage.mat``; re-planning an iterative chain grows superlinearly
+    otherwise), which is reliable exactly when the session has a
+    checkpoint directory.  Every round's convergence sum is the action
+    that materializes that round's blocks, so a round costs one job, not
+    an eager-checkpoint job plus a sum job.  Dup graphs converge in
     2-4 rounds (components are small and star-shaped); ``max_iters``
     only bounds adversarial chains.
 
@@ -132,24 +122,11 @@ def connected_components(
     """
     from target_parquet_spark.lineage import mat
 
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _cut(df):
-        # LAZY cut (lineage.mat): every round's convergence sum is the
-        # action that materializes that round's blocks, so a round costs
-        # ONE job instead of two (eager-checkpoint job + sum job) — at
-        # 3-5 rounds x 4 CC consumers the launch overhead was a visible
-        # slice of the sf0.1 bench (guide §1.2 per-task/launch work).
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=False)
-        return mat(df)
-
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = _cut(sym.repartition(_width(edges), "u"))
+    sym = mat(sym.repartition(_width(edges), "u"))
 
-    labels = _cut(
+    labels = mat(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -162,7 +139,7 @@ def connected_components(
         # nbr_min feeds BOTH sides of the pointer-jump join below — cut
         # it so the propagate join + min aggregate run once per round,
         # not twice.
-        nbr_min = _cut(
+        nbr_min = mat(
             sym.join(labels, sym["u"] == labels["node"])
             .select(F.col("v").alias("node"), "label")
             .unionByName(labels)
@@ -173,7 +150,7 @@ def connected_components(
         hop = nbr_min.select(
             F.col("node").alias("_jn"), F.col("label").alias("_jl")
         )
-        labels = _cut(
+        labels = mat(
             nbr_min.join(hop, nbr_min["label"] == hop["_jn"], "left")
             .select("node", F.coalesce("_jl", "label").alias("label"))
         )

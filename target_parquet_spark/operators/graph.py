@@ -21,32 +21,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from target_parquet_spark.operators.dedup import lineage_cut
+from target_parquet_spark.lineage import cut
 
 __all__ = ["pagerank", "personalized_pagerank", "lpa_communities", "hits"]
 
 
-
-def _edge_node_tables(edges, src, dst, weight, checkpoint_dir):
+def _edge_node_tables(edges, src, dst, weight):
     """Normalize (u, v, w) edges and derive the distinct node table —
     the shared front half of every power-iteration rank op."""
     w = F.col(weight) if weight else F.lit(1.0)
-    e = lineage_cut(
+    e = cut(
         edges.select(
             F.col(src).alias("u"), F.col(dst).alias("v"), w.cast("double").alias("w")
         ),
-        checkpoint_dir,
+        eager=True,
     )
-    nodes = lineage_cut(
+    nodes = cut(
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
         .distinct(),
-        checkpoint_dir,
+        eager=True,
     )
     return e, nodes
 
 
-def _rank_loop(e, base, init, update, iters, checkpoint_dir):
+def _rank_loop(e, base, init, update, iters):
     """The shared power-iteration body: per round, one src-key join +
     one dst groupBy, then ``update(coalesced contribution)`` over
     ``base`` (the node table plus any state columns, e.g. the teleport
@@ -65,8 +64,8 @@ def _rank_loop(e, base, init, update, iters, checkpoint_dir):
     The per-edge arithmetic ``rank / outw * w`` is untouched — same
     expression tree, same floats, oracles stay hash-exact."""
     outw = e.groupBy("u").agg(F.sum("w").alias("outw"))
-    ew = lineage_cut(e.join(outw, "u").repartition("u"), checkpoint_dir)
-    base = lineage_cut(base.repartition("node"), checkpoint_dir)
+    ew = cut(e.join(outw, "u").repartition("u"), eager=True)
+    base = cut(base.repartition("node"), eager=True)
     ranks = base.select("node", init.alias("rank"))
     for _ in range(iters):
         contrib = (
@@ -78,13 +77,13 @@ def _rank_loop(e, base, init, update, iters, checkpoint_dir):
             .groupBy("node")
             .agg(F.sum("c").alias("c"))
         )
-        ranks = lineage_cut(
+        ranks = cut(
             base.join(contrib, "node", "left")
             .select(
                 "node",
                 update(F.coalesce("c", F.lit(0.0))).alias("rank"),
             ),
-            checkpoint_dir,
+            eager=True,
         )
     return ranks
 
@@ -96,7 +95,6 @@ def pagerank(
     weight: str | None = None,
     iters: int = 5,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list; returns
     ``(node, rank)`` after exactly ``iters`` power iterations from the
@@ -105,14 +103,11 @@ def pagerank(
     Mass from dangling nodes (no out-edges) is NOT redistributed — feed
     a symmetrized graph (every node has out-edges) or accept the leak;
     the dup-similarity graph is symmetric by construction.  Lineage is
-    cut per round: ``localCheckpoint`` by default, reliable
-    ``checkpoint`` into ``checkpoint_dir`` for executor-loss safety on
-    long cluster runs (VERDICT r2 #8); ranks are tiny (one double per
-    node) so the pinned blocks are negligible next to the edge shuffle.
+    cut per round (``lineage.cut``: reliable when the session has a
+    checkpoint directory); ranks are tiny (one double per node) so the
+    pinned blocks are negligible next to the edge shuffle.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    e, nodes = _edge_node_tables(edges, src, dst, weight, checkpoint_dir)
+    e, nodes = _edge_node_tables(edges, src, dst, weight)
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
@@ -123,7 +118,6 @@ def pagerank(
         F.lit(1.0 / n),
         lambda c: F.lit(teleport) + F.lit(damping) * c,
         iters,
-        checkpoint_dir,
     )
 
 
@@ -174,11 +168,11 @@ def lpa_communities(
             .filter(F.col("rn") == 1)
             .select(F.col("u").alias("node"), F.col("lbl").alias("maj"))
         )
-        labels = lineage_cut(
+        labels = cut(
             labels.join(nb, "node", "left").select(
                 "node", F.coalesce("maj", "lbl").alias("lbl")
             ),
-            None,
+            eager=True,
         )
     return labels
 
@@ -191,7 +185,6 @@ def personalized_pagerank(
     weight: str | None = None,
     iters: int = 5,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Personalized (seed-teleport) PageRank — the TrustRank shape
     (Gyongyi et al. 2004): the teleport vector is uniform over ``seeds``
@@ -204,9 +197,7 @@ def personalized_pagerank(
     Scale: identical per-round cost to pagerank (one src join + one dst
     groupBy); the teleport column rides the node table — no extra
     shuffle.  The seed count is collected once (bounded scalar)."""
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    e, nodes = _edge_node_tables(edges, src, dst, weight, checkpoint_dir)
+    e, nodes = _edge_node_tables(edges, src, dst, weight)
     sd = nodes.join(seeds.select(F.col("node")), "node")
     n_seeds = sd.count()
     if n_seeds == 0:
@@ -223,7 +214,6 @@ def personalized_pagerank(
         F.col("tp"),
         lambda c: F.lit(1.0 - damping) * F.col("tp") + F.lit(damping) * c,
         iters,
-        checkpoint_dir,
     )
 
 
@@ -232,7 +222,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iters: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge
     list; returns ``(node, hub_micro, auth_micro)`` after exactly
@@ -253,23 +242,19 @@ def hits(
     dst-key join + src groupBy (hubs), and two 1-row integer totals
     broadcast back — the same two-shuffle cost profile as
     :func:`pagerank` with per-node state of two 8-byte ints.  Lineage
-    is cut per round (localCheckpoint) as in every iterative op here.
+    is cut per round (``lineage.cut``) as in every iterative op here.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    e, nodes = _edge_node_tables(edges, src, dst, None, checkpoint_dir)
+    e, nodes = _edge_node_tables(edges, src, dst, None)
     # Materialize BOTH join orientations once, each hash-partitioned on
     # its half-round's join key (localCheckpoint freezes partitioning
     # into the LogicalRDD): the six half-rounds then exchange only the
     # node-sized score table, never the edge table — the r7 fix for the
     # sf10 tail (5.04x/decade came from re-shuffling edges per half).
     e_by = {
-        "u": lineage_cut(e.select("u", "v").repartition("u"),
-                         checkpoint_dir),
-        "v": lineage_cut(e.select("u", "v").repartition("v"),
-                         checkpoint_dir),
+        "u": cut(e.select("u", "v").repartition("u"), eager=True),
+        "v": cut(e.select("u", "v").repartition("v"), eager=True),
     }
-    nodes = lineage_cut(nodes.repartition("node"), checkpoint_dir)
+    nodes = cut(nodes.repartition("node"), eager=True)
 
     def _half(scores, key_in, key_out):
         """One normalization half: pull scores across edges onto
@@ -278,14 +263,14 @@ def hits(
         # normalize join — uncut, Spark would recompute the edge join
         # + groupBy twice per half-round
         eo = e_by[key_in]
-        raw = lineage_cut(
+        raw = cut(
             eo.join(scores, scores["node"] == eo[key_in])
             .groupBy(F.col(key_out).alias("node"))
             .agg(F.sum("score").cast("long").alias("raw")),
-            checkpoint_dir,
+            eager=True,
         )
         tot = raw.agg(F.sum("raw").cast("long").alias("s"))
-        return lineage_cut(
+        return cut(
             nodes.join(raw, "node", "left")
             .crossJoin(F.broadcast(tot))
             .select(
@@ -300,7 +285,7 @@ def hits(
                 .otherwise(F.lit(0).cast("long"))
                 .alias("score"),
             ),
-            checkpoint_dir,
+            eager=True,
         )
 
     hub = nodes.select("node", F.lit(1000000).cast("long").alias("score"))

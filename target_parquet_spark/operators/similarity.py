@@ -13,8 +13,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,47 +38,12 @@ __all__ = [
 ]
 
 
-#: Opt-in for the unrolled fixed-width dot kernel (see :func:`dot`).
-#: Default OFF: measured on the 246-query sf0.1 bench, the unrolled
-#: chains REGRESS real queries (suite 322s -> 376s; sim_mmr_select
-#: 1.5s -> 11.2s) because each 64-term chain is ~200 Catalyst nodes
-#: that plans instantiate many times (cosine = 3 chains; MMR/ANN
-#: verify/rerank paths dozens), so analysis + janino + JIT of the
-#: generated code dominates small-scan queries.  The chain only wins
-#: when FEW chain instances process MANY rows: 22.9s -> 3.8s on the
-#: isolated 4M-pair fold microbench (6x, with -XX:-DontCompileHugeMethods).
-#: At the compute-saturated decades (sf100 pair joins) that regime can
-#: hold — flip SPARK_GRAFT_DOT_UNROLL=1 there and re-measure; results
-#: are bit-identical either way (same IEEE op order, proven 0/4M
-#: mismatches + full oracle sweep under both kernels).
-_UNROLL_FIXED_DIM = os.environ.get("SPARK_GRAFT_DOT_UNROLL", "") == "1"
-
-
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential-fold dot product in double precision.
-
-    With ``dim`` — the statically-known width of BOTH arrays — AND the
-    ``SPARK_GRAFT_DOT_UNROLL=1`` env opt-in, the same left-to-right fold
-    ``((0.0 + a0*b0) + a1*b1) + ...`` is emitted as an unrolled
-    arithmetic chain instead of the ``aggregate(zip_with(...))``
-    higher-order fold.  Bit-identical (identical IEEE op order, identical
-    null poisoning).  Trade-off and the measured numbers behind the
-    default: see ``_UNROLL_FIXED_DIM`` above.
-
-    ``dim`` MUST equal the true array width: shorter arrays null-poison
-    (same as the fold when one side is shorter), but if BOTH arrays were
-    longer than ``dim`` the chain would silently truncate where the fold
-    sums everything — callers opt in only where the width is pinned
-    (this corpus: 64-dim embeddings).
-    """
-    if dim is not None and _UNROLL_FIXED_DIM:
-        # F.get, not a[i]: under ANSI mode (Spark 4 default) a[i] THROWS
-        # on a short array where the fold null-poisons; get() returns
-        # null and the chain poisons identically.
-        acc: Column = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-        return acc
+def dot(a: Column, b: Column) -> Column:
+    """Sequential-fold dot product in double precision: the
+    ``aggregate(zip_with(...))`` higher-order fold, left to right
+    ``((0.0 + a0*b0) + a1*b1) + ...``.  The fixed IEEE op order is what
+    lets the DuckDB oracles reproduce it bit-for-bit.  A shorter array
+    on either side null-poisons the result."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -88,12 +51,12 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def norm(a: Column) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def brute_force_topk(
@@ -102,7 +65,6 @@ def brute_force_topk(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine: broadcast the 1-row query, scan the corpus.
 
@@ -112,7 +74,7 @@ def brute_force_topk(
     q = F.broadcast(query.select(F.col(vec_col).alias("_qvec")))
     scored = corpus.crossJoin(q).select(
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col("_qvec"), dim), 4).alias("sim"),
+        F.round(cosine(F.col(vec_col), F.col("_qvec")), 4).alias("sim"),
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
@@ -218,7 +180,7 @@ def lsh_ann_multiprobe(
         .select(
             F.col(id_col),
             F.col("bucket"),
-            F.round(cosine(F.col(vec_col), F.col("_qvec"), dim), 4).alias("sim"),
+            F.round(cosine(F.col(vec_col), F.col("_qvec")), 4).alias("sim"),
         )
         .filter(F.col("sim") >= threshold)
     )
@@ -262,11 +224,11 @@ def ivf_codebook(
 def _lloyd_round_expr(emb, ordered, norms, metric):
     """The r10 literal-expression Lloyd round: one K x dim nested-array
     literal, transform/aggregate folds for the scores, (d, k) struct
-    array_min for the argmin, posexplode + F.avg for the update.  Kept
-    as the ``SPARK_GRAFT_KMEANS_EXPR=1`` fallback and A/B arm for the
-    Arrow round (values bit-identical; the Arrow kernel's docstring
-    carries the exactness argument).  Returns the un-collected means
-    frame (k, dim, c)."""
+    array_min for the argmin, posexplode + F.avg for the update.  The
+    round ``kmeans_codebook`` runs for small codebooks (K*dim < 512);
+    values are bit-identical to the Arrow round (the Arrow kernel's
+    docstring carries the exactness argument).  Returns the un-collected
+    means frame (k, dim, c)."""
     mat_lit = F.lit(ordered)
     if metric == "l2":
         dists = F.transform(
@@ -514,12 +476,8 @@ def kmeans_codebook(
     # per-round analysis+codegen scales with K*dim (K=16: 6.54->4.75 s,
     # K=8: 4.99->4.37 s) and loses to its own flat Python-stage
     # overhead at tiny K (K=4 l2: 2.23->2.52 s) — so small codebooks
-    # keep the expression form.  SPARK_GRAFT_KMEANS_EXPR=1 forces it
-    # everywhere (A/B arm / fallback).
-    use_expr = (
-        os.environ.get("SPARK_GRAFT_KMEANS_EXPR", "") == "1"
-        or n_centroids * dim < 512
-    )
+    # keep the expression form.
+    use_expr = n_centroids * dim < 512
     for _ in range(n_iters):
         ordered = [cv for _k, cv in sorted(centroids.items())]
         if metric == "l2":
@@ -532,9 +490,8 @@ def kmeans_codebook(
                     s += x * x
                 norms.append(math.sqrt(s))
         if use_expr:
-            # The r10 literal-expression round (kept as the measured
-            # fallback / A-B arm; results bit-identical — see the
-            # exactness contract above).
+            # results bit-identical to the Arrow round — see the
+            # exactness contract above
             means = _lloyd_round_expr(emb, ordered, norms, metric)
         else:
             partial_fn = _lloyd_round_partials(ordered, norms, metric, dim)
@@ -631,7 +588,6 @@ def ivf_ann(
     probe = ivf_probe_cells(qv, codebook, nprobe)
 
     qlit = F.expr(sql_text.double_array(qv))
-    dim = len(qv)
     assigned = corpus.withColumn("cell", ivf_cell(F.col(vec_col), codebook))
     return (
         assigned.filter(F.col("cell").isin(probe))
@@ -639,8 +595,8 @@ def ivf_ann(
             F.col(id_col),
             F.col("cell"),
             F.round(
-                dot(F.col(vec_col), qlit, dim)
-                / (norm(F.col(vec_col), dim) * F.lit(qnorm)),
+                dot(F.col(vec_col), qlit)
+                / (norm(F.col(vec_col)) * F.lit(qnorm)),
                 4,
             ).alias("sim"),
         )
@@ -675,7 +631,7 @@ def lsh_ann_topk(
         .select(
             F.col(id_col),
             F.col("bucket"),
-            F.round(cosine(F.col(vec_col), F.col("_qvec"), dim), 4).alias("sim"),
+            F.round(cosine(F.col(vec_col), F.col("_qvec")), 4).alias("sim"),
         )
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
@@ -798,7 +754,7 @@ def semantic_dup_pairs(
         corpus, vec_col, target_occupancy, floor=8, n_planes=n_planes,
         caller="semantic_dup_pairs",
     )
-    based = corpus.withColumn("_nrm", norm(F.col(vec_col), dim))
+    based = corpus.withColumn("_nrm", norm(F.col(vec_col)))
     pair_sets = []
     for t_idx in range(n_tables):
         b = based.withColumn(
@@ -815,7 +771,7 @@ def semantic_dup_pairs(
                 F.col(f"x.{id_col}").alias("id_a"),
                 F.col(f"y.{id_col}").alias("id_b"),
                 F.round(
-                    dot(F.col(f"x.{vec_col}"), F.col(f"y.{vec_col}"), dim)
+                    dot(F.col(f"x.{vec_col}"), F.col(f"y.{vec_col}"))
                     / (F.col("x._nrm") * F.col("y._nrm")),
                     4,
                 ).alias("sim"),
@@ -910,7 +866,7 @@ def knn_graph(
     base = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col),
         F.col(vec_col),
-        norm(F.col(vec_col), dim).alias("_nrm"),
+        norm(F.col(vec_col)).alias("_nrm"),
     ).filter(F.col("_nrm") > 0)
     cand_sets = []
     for t_idx in range(n_tables):
@@ -947,7 +903,7 @@ def knn_graph(
                 "src",
                 "nbr",
                 F.round(
-                    dot(F.col("_xv"), F.col("_yv"), dim)
+                    dot(F.col("_xv"), F.col("_yv"))
                     / (F.col("_xn") * F.col("_yn")),
                     4,
                 ).alias("sim"),
@@ -974,7 +930,7 @@ def knn_graph(
     )
 
 
-def int_dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def int_dot(a: Column, b: Column) -> Column:
     """Sequential integer-fold dot product over int code arrays — the
     cheap half of the ADC/rerank split.  All arithmetic stays in int32
     (64 dims x 127² per term ≈ 1M, far under overflow), no doubles, no
@@ -982,15 +938,7 @@ def int_dot(a: Column, b: Column, dim: int | None = None) -> Column:
     cast-to-double per element, which is what restores cache locality
     at the compute-saturated decade (BASELINE.md r8: the float fold ran
     ~1.4-1.5x over linear once the working set passed cache scale).
-
-    ``dim`` (+ the ``SPARK_GRAFT_DOT_UNROLL=1`` opt-in) unrolls the fold
-    into a codegen'd int chain (same order, exact integer arithmetic —
-    see :func:`dot` for the contract and the measured trade-off)."""
-    if dim is not None and _UNROLL_FIXED_DIM:
-        acc: Column = F.lit(0)
-        for i in range(dim):
-            acc = acc + F.get(a, i) * F.get(b, i)
-        return acc
+    Same left-to-right fold and null poisoning as :func:`dot`."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0),
@@ -1075,7 +1023,7 @@ def knn_graph_quantized(
     base = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col),
         F.col(vec_col),
-        norm(F.col(vec_col), dim).alias("_nrm"),
+        norm(F.col(vec_col)).alias("_nrm"),
     ).filter(F.col("_nrm") > 0)
     # model state: ONE corpus-wide scale (1-row agg, plan-time literal)
     scale = base.agg(
@@ -1119,7 +1067,7 @@ def knn_graph_quantized(
                 "nbr",
                 # integer fold; ONE double divide per candidate
                 (
-                    int_dot(F.col("_xc"), F.col("_yc"), dim).cast("double")
+                    int_dot(F.col("_xc"), F.col("_yc")).cast("double")
                     / (F.col("_xn") * F.col("_yn"))
                 ).alias("qsim"),
             )
@@ -1160,7 +1108,7 @@ def knn_graph_quantized(
                 "src",
                 "nbr",
                 F.round(
-                    dot(F.col("_xv"), F.col("_yv"), dim)
+                    dot(F.col("_xv"), F.col("_yv"))
                     / (F.col("_xn") * F.col("_yn")),
                     4,
                 ).alias("sim"),
@@ -1329,7 +1277,7 @@ def semdedup_keep(
     # (micro-quantizing components FIRST would flip pairs sitting
     # exactly on the tau boundary; review caught that drift).
     cos_micro = F.round(
-        cosine(F.col("_aemb"), F.col("_bemb"), dim) * 1000000
+        cosine(F.col("_aemb"), F.col("_bemb")) * 1000000
     ).cast("long")
     bv = base.select(
         F.col("vec_id").alias("_bid"), F.col("_v").alias("_bemb")

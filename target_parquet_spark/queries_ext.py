@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from target_parquet_spark.lineage import cut
 from target_parquet_spark.operators import dedup as D
 from target_parquet_spark.operators import multimodal as M
 from target_parquet_spark.operators import similarity as S
@@ -827,7 +828,7 @@ def sim_brute_force(spark, sf_dir):
         .select(
             "vec_id",
             F.round(
-                S.cosine(F.col("embedding"), F.col("_qvec"), 64), 4
+                S.cosine(F.col("embedding"), F.col("_qvec")), 4
             ).alias("sim"),
         )
         .filter(F.col("sim") >= 0.15)
@@ -922,7 +923,7 @@ def sim_ann_lsh(spark, sf_dir):
         "vec_id",
         "bucket",
         F.round(
-            S.cosine(F.col("embedding"), F.col("_qvec"), 64), 4
+            S.cosine(F.col("embedding"), F.col("_qvec")), 4
         ).alias("sim"),
     )
 
@@ -1027,7 +1028,7 @@ def sim_embedding_dedup(spark, sf_dir):
             F.col("x.vec_id").alias("id_a"),
             F.col("y.vec_id").alias("id_b"),
             F.round(
-                S.cosine(F.col("x.embedding"), F.col("y.embedding"), 64), 4
+                S.cosine(F.col("x.embedding"), F.col("y.embedding")), 4
             ).alias("sim"),
         )
         .filter(F.col("sim") >= 0.98)
@@ -1200,7 +1201,7 @@ def sim_topk_per_query(spark, sf_dir):
     scored = emb.crossJoin(q).select(
         "query_id",
         "vec_id",
-        S.cosine(F.col("embedding"), F.col("_qv"), 64).alias("sim_raw"),
+        S.cosine(F.col("embedding"), F.col("_qv")).alias("sim_raw"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), F.asc("vec_id"))
     return (
@@ -1796,7 +1797,7 @@ def text_bpe_merge_induction(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     spaced = F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
-    v = words.select(spaced.alias("s"), "cnt").localCheckpoint()
+    v = cut(words.select(spaced.alias("s"), "cnt"), eager=True)
 
     out = []
     for step in range(1, 4):
@@ -1817,9 +1818,13 @@ def text_bpe_merge_induction(spark, sf_dir):
         out.append((step, best.pr, int(best.f)))
         merged = best.pr.replace(" ", "").replace("'", "''")
         pat = best.pr.replace("'", "''")
-        v = v.select(
-            F.expr(f"replace(s, ' {pat} ', ' {merged} ')").alias("s"), "cnt"
-        ).localCheckpoint()
+        v = cut(
+            v.select(
+                F.expr(f"replace(s, ' {pat} ', ' {merged} ')").alias("s"),
+                "cnt",
+            ),
+            eager=True,
+        )
 
     return spark.createDataFrame(out, "step int, pair string, freq long")
 

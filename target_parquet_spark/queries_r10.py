@@ -35,6 +35,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from target_parquet_spark.lineage import cut
 from target_parquet_spark.operators import similarity as S
 from target_parquet_spark.queries import query, t
 from target_parquet_spark.queries_ext import (
@@ -1063,7 +1064,6 @@ def graph_kcore(spark, sf_dir):
     state is one id column.  Edge generation amortizes across the graph
     family via the written k-NN artifact (queries_r7.knn_edge_artifact
     — the measured path reads parquet, it does not re-derive)."""
-    from target_parquet_spark.operators.dedup import lineage_cut
     from target_parquet_spark.queries_r6 import _symmetrize_degrees
     from target_parquet_spark.queries_r7 import knn_edge_artifact
 
@@ -1078,7 +1078,7 @@ def graph_kcore(spark, sf_dir):
     # and the map-side-combined (u, cnt) partials move.  Identical
     # survivor sets: counting pairs with both endpoints active grouped
     # by u == counting active-v neighbors per u then keeping active u.
-    sym = lineage_cut(sym.repartition("v"), None)
+    sym = cut(sym.repartition("v"), eager=True)
     active = sym.select(F.col("u").alias("node")).distinct()
     n0 = active
     d1 = None
@@ -1091,8 +1091,8 @@ def graph_kcore(spark, sf_dir):
         )
         if d1 is None:
             d1 = deg
-        active = lineage_cut(
-            deg.filter(F.col("d") >= _KCORE_K).select("node"), None
+        active = cut(
+            deg.filter(F.col("d") >= _KCORE_K).select("node"), eager=True
         )
     return (
         n0.join(d1.withColumnRenamed("d", "_d0"), "node", "left")

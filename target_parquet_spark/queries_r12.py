@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from target_parquet_spark.lineage import cut
 from target_parquet_spark.queries import query, t as td
 
 # --- patterns (shared dialect: Java regex == RE2 == Python re) -------------
@@ -415,9 +416,7 @@ def ktruss_peel(sym, k: int = _KTRUSS_K, rounds: int = _KTRUSS_ROUNDS):
     graph_ktruss and its degree-capped twin (r8) so the loop cannot
     drift between them.  Returns the canonical-edge report frame
     (u, v, support_initial, in_truss)."""
-    from target_parquet_spark.operators.dedup import lineage_cut
-
-    sym = lineage_cut(sym, None)
+    sym = cut(sym, eager=True)
     e = sym.filter(F.col("u") < F.col("v"))
     s = sym
     sup1 = None
@@ -432,11 +431,11 @@ def ktruss_peel(sym, k: int = _KTRUSS_K, rounds: int = _KTRUSS_ROUNDS):
             .agg(F.count(F.lit(1)).cast("long").alias("sup"))
         )
         if sup1 is None:
-            sup1 = lineage_cut(sup, None)
+            sup1 = cut(sup, eager=True)
             sup = sup1
-        e = lineage_cut(
+        e = cut(
             sup.filter(F.col("sup") >= k - 2).select("u", "v"),
-            None,
+            eager=True,
         )
         s = e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1340,13 +1339,12 @@ def _register_betweenness():
         8-byte ints; each level is one edge join + one grouped integer
         sum keyed on (seed, node); the backward pass mirrors it.  The
         oracle replays the levels as unrolled CTEs."""
-        from target_parquet_spark.operators.dedup import lineage_cut
         from target_parquet_spark.queries_r6 import _symmetrize_degrees
         from target_parquet_spark.queries_r7 import knn_edge_artifact
 
         edges = knn_edge_artifact(spark, sf_dir)
         sym, _ = _symmetrize_degrees(edges)
-        sym = lineage_cut(sym.repartition("u"), None)
+        sym = cut(sym.repartition("u"), eager=True)
 
         seeds = (
             sym.select(F.col("u").alias("node"))
@@ -1358,7 +1356,7 @@ def _register_betweenness():
             "node",
             F.lit(1).cast("long").alias("sig"),
         )
-        levels = [lineage_cut(l0, None)]
+        levels = [cut(l0, eager=True)]
         visited = levels[0].select("seed", "node")
         for _k in range(1, _BC_DEPTH + 1):
             f = levels[-1]
@@ -1372,7 +1370,7 @@ def _register_betweenness():
                 .groupBy("seed", F.col("v").alias("node"))
                 .agg(F.sum("sig").cast("long").alias("sig"))
             )
-            nxt = lineage_cut(nxt, None)
+            nxt = cut(nxt, eager=True)
             levels.append(nxt)
             visited = visited.unionByName(nxt.select("seed", "node"))
         deltas = [None] * (_BC_DEPTH + 1)
@@ -1410,13 +1408,13 @@ def _register_betweenness():
                 .cast("long")
                 .alias("cn"),
             )
-            deltas[k] = lineage_cut(
+            deltas[k] = cut(
                 contrib.groupBy("seed", "node").agg(
                     F.coalesce(F.sum("cn"), F.lit(0))
                     .cast("long")
                     .alias("dn")
                 ),
-                None,
+                eager=True,
             )
         alld = deltas[1]
         for k in range(2, _BC_DEPTH):

@@ -766,7 +766,7 @@ def sim_random_projection(spark, sf_dir):
     p = emb.select(
         "vec_id",
         "embedding",
-        F.array(*[dot(F.col("embedding"), s, _RP_D) for s in signs]).alias("p"),
+        F.array(*[dot(F.col("embedding"), s) for s in signs]).alias("p"),
     )
     q = F.broadcast(
         p.filter(F.col("vec_id") == 1).select(
@@ -779,13 +779,13 @@ def sim_random_projection(spark, sf_dir):
         .select(
             "vec_id",
             F.round(
-                dot(F.col("p"), F.col("qp"), _RP_K)
-                / (norm(F.col("p"), _RP_K) * norm(F.col("qp"), _RP_K)),
+                dot(F.col("p"), F.col("qp"))
+                / (norm(F.col("p")) * norm(F.col("qp"))),
                 4,
             ).alias("proj_cos"),
             F.round(
-                dot(F.col("embedding"), F.col("qv"), _RP_D)
-                / (norm(F.col("embedding"), _RP_D) * norm(F.col("qv"), _RP_D)),
+                dot(F.col("embedding"), F.col("qv"))
+                / (norm(F.col("embedding")) * norm(F.col("qv"))),
                 4,
             ).alias("true_cos"),
         )
@@ -1020,13 +1020,13 @@ def sim_sq8_ann(spark, sf_dir):
         .select(
             "vec_id",
             F.round(
-                dot(F.col("qv"), F.col("rv"), _RP_D)
-                / (norm(F.col("rv"), _RP_D) * norm(F.col("qv"), _RP_D)),
+                dot(F.col("qv"), F.col("rv"))
+                / (norm(F.col("rv")) * norm(F.col("qv"))),
                 4,
             ).alias("sq8_cos"),
             F.round(
-                dot(F.col("qv"), F.col("embedding"), _RP_D)
-                / (norm(F.col("embedding"), _RP_D) * norm(F.col("qv"), _RP_D)),
+                dot(F.col("qv"), F.col("embedding"))
+                / (norm(F.col("embedding")) * norm(F.col("qv"))),
                 4,
             ).alias("true_cos"),
         )

@@ -757,8 +757,8 @@ def sim_ivf_recall(spark, sf_dir):
         "qid",
         "cid",
         (
-            S.dot(F.col("qv"), F.col("cv"), 64)
-            / F.sqrt(S.dot(F.col("cv"), F.col("cv"), 64))
+            S.dot(F.col("qv"), F.col("cv"))
+            / F.sqrt(S.dot(F.col("cv"), F.col("cv")))
         ).alias("score"),
     )
     w_probe = Window.partitionBy("qid").orderBy(F.desc("score"), "cid")
@@ -771,7 +771,7 @@ def sim_ivf_recall(spark, sf_dir):
     # instead of one per (vector, query) pair — same IEEE double as the
     # inline sqrt (the oracle keeps the inline form, values identical)
     embn = emb.withColumn(
-        "nrm", F.sqrt(S.dot(F.col("embedding"), F.col("embedding"), 64))
+        "nrm", F.sqrt(S.dot(F.col("embedding"), F.col("embedding")))
     )
     scored = (
         embn.crossJoin(F.broadcast(q))
@@ -780,7 +780,7 @@ def sim_ivf_recall(spark, sf_dir):
             "qid",
             "vec_id",
             (
-                S.dot(F.col("embedding"), F.col("qv"), 64) / F.col("nrm")
+                S.dot(F.col("embedding"), F.col("qv")) / F.col("nrm")
             ).alias("score"),
         )
     )
@@ -918,7 +918,7 @@ def sim_ivf_recall_trained(spark, sf_dir):
     probe = spark.createDataFrame(probe_pairs, "qid long, cid int")
 
     embn = emb.withColumn(
-        "nrm", F.sqrt(S.dot(F.col("embedding"), F.col("embedding"), 64))
+        "nrm", F.sqrt(S.dot(F.col("embedding"), F.col("embedding")))
     )
     scored = (
         embn.crossJoin(F.broadcast(q))
@@ -927,7 +927,7 @@ def sim_ivf_recall_trained(spark, sf_dir):
             "qid",
             "vec_id",
             (
-                S.dot(F.col("embedding"), F.col("qv"), 64) / F.col("nrm")
+                S.dot(F.col("embedding"), F.col("qv")) / F.col("nrm")
             ).alias("score"),
         )
     )
@@ -1476,7 +1476,7 @@ def sim_mmr_select(spark, sf_dir):
         .select(
             "vec_id",
             "embedding",
-            S.cosine(F.col("embedding"), F.lit(qv), 64).alias("rel"),
+            S.cosine(F.col("embedding"), F.lit(qv)).alias("rel"),
         )
         .orderBy(F.desc("rel"), "vec_id")
         .limit(12)
@@ -1488,7 +1488,7 @@ def sim_mmr_select(spark, sf_dir):
         for _rank in range(4):
             if sel_vecs:
                 sims = [
-                    S.cosine(F.col("embedding"), F.lit(v), 64) for v in sel_vecs
+                    S.cosine(F.col("embedding"), F.lit(v)) for v in sel_vecs
                 ]
                 div = sims[0] if len(sims) == 1 else F.greatest(*sims)
                 mmr = F.lit(lam) * F.col("rel") - F.lit(1 - lam) * div
@@ -3113,7 +3113,7 @@ def sim_semantic_clusters(spark, sf_dir):
             F.col("x.vec_id").alias("id_a"),
             F.col("y.vec_id").alias("id_b"),
             F.round(
-                S.cosine(F.col("x.embedding"), F.col("y.embedding"), 64), 4
+                S.cosine(F.col("x.embedding"), F.col("y.embedding")), 4
             ).alias("sim"),
         )
         .filter(F.col("sim") >= 0.98)

@@ -152,7 +152,7 @@ def _knn_edges(spark, sf_dir, k: int = 3):
         "vec_id",
         "embedding",
         S.lsh_bucket(F.col("embedding"), n_planes=4).alias("bucket"),
-        F.sqrt(S.dot(F.col("embedding"), F.col("embedding"), 64)).alias("nrm"),
+        F.sqrt(S.dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
     ).repartition("bucket")
     a = b.select(
         F.col("vec_id").alias("src"),
@@ -189,7 +189,7 @@ def _knn_edges(spark, sf_dir, k: int = 3):
             "src",
             "nbr",
             F.round(
-                S.dot(F.col("_avec"), F.col("_cvec"), 64)
+                S.dot(F.col("_avec"), F.col("_cvec"))
                 / (F.col("_anrm") * F.col("_cnrm")),
                 4,
             ).alias("sim"),
@@ -1232,8 +1232,8 @@ def _register_ivf_partitioned():
                 "vec_id",
                 "cell",
                 F.round(
-                    S.dot(F.col("embedding"), qlit, 64)
-                    / (S.norm(F.col("embedding"), 64) * F.lit(qnorm)),
+                    S.dot(F.col("embedding"), qlit)
+                    / (S.norm(F.col("embedding")) * F.lit(qnorm)),
                     4,
                 ).alias("sim"),
             )

@@ -25,7 +25,7 @@ import functools
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from target_parquet_spark.lineage import mat
+from target_parquet_spark.lineage import cut, mat
 from target_parquet_spark.operators import dedup as D
 from target_parquet_spark.operators import text as X
 from target_parquet_spark.queries import query
@@ -428,20 +428,20 @@ def learn_bpe_merges(spark, sf_dir, n_rounds: int = _BPE_ROUNDS):
     then the merge re-enters the plan as a literal string replace.  The
     vocabulary is word-level (freq-weighted) — at 100 TB the words table
     is the ONLY thing the loop touches after one corpus pass, and it is
-    millions of rows regardless of corpus size; it is localCheckpointed
+    millions of rows regardless of corpus size; its lineage is cut
     once so the per-round passes do not re-run the corpus explode."""
     docs = td(spark, sf_dir, "documents")
-    vocab = (
+    # lazy: the total_freq aggregate right below is the action that
+    # materializes the blocks — an eager cut here was one extra job
+    vocab = cut(
         docs.select(F.explode(X.bpe_tokens(F.col("text"))).alias("word"))
         .filter(~F.col("word").contains(_BPE_SEP))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .withColumn(
             "enc", F.regexp_replace("word", "(.)", _BPE_SEP + "$1" + _BPE_SEP)
-        )
-        # lazy: the total_freq aggregate right below is the action that
-        # materializes the blocks — an eager cut here was one extra job
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
 
     def _syms(enc):

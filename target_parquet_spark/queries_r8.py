@@ -354,7 +354,7 @@ def sim_pca_power_iteration(spark, sf_dir):
     v = pca_power_component(spark, sf_dir)
     emb = td(spark, sf_dir, "embeddings").select("label", "embedding")
     lit_v = F.array(*[F.lit(x) for x in v])
-    pi = F.round(S.dot(F.col("embedding"), lit_v, 64) * 1000000).cast("long")
+    pi = F.round(S.dot(F.col("embedding"), lit_v) * 1000000).cast("long")
     p = emb.select("label", pi.alias("pi"))
     n = F.count(F.lit(1))
     s1 = F.sum("pi")
@@ -442,7 +442,7 @@ def pca_top2_components(spark, sf_dir, emb=None):
     # two-stage select: compute d once per row, THEN subtract — inlining
     # the dot into the zip_with lambda would re-evaluate it per element
     with_d = emb.select(
-        "embedding", S.dot(F.col("embedding"), lit1, 64).alias("d")
+        "embedding", S.dot(F.col("embedding"), lit1).alias("d")
     )
     res = mat(
         with_d.select(
@@ -481,8 +481,8 @@ def sim_pca_deflation(spark, sf_dir):
     emb = td(spark, sf_dir, "embeddings").select("label", "embedding")
     lit1 = F.array(*[F.lit(x) for x in v1])
     lit2 = F.array(*[F.lit(x) for x in v2])
-    p1 = F.round(S.dot(F.col("embedding"), lit1, 64) * 1000000).cast("long")
-    p2 = F.round(S.dot(F.col("embedding"), lit2, 64) * 1000000).cast("long")
+    p1 = F.round(S.dot(F.col("embedding"), lit1) * 1000000).cast("long")
+    p2 = F.round(S.dot(F.col("embedding"), lit2) * 1000000).cast("long")
     p = emb.select("label", p1.alias("p1"), p2.alias("p2"))
     n = F.count(F.lit(1))
 
@@ -625,7 +625,7 @@ def graph_ann_search(
             "vec_id",
             "embedding",
             S.lsh_bucket(F.col("embedding"), n_planes=4).alias("bucket"),
-            S.norm(F.col("embedding"), 64).alias("nrm"),
+            S.norm(F.col("embedding")).alias("nrm"),
         )
     )
     q = b.filter(F.col("vec_id") % _ANN_QMOD == 7).select(
@@ -634,7 +634,7 @@ def graph_ann_search(
         F.col("nrm").alias("qn"),
     )
     score = F.round(
-        S.dot(F.col("ne"), F.col("qe"), 64) / (F.col("qn") * F.col("nn")), 6
+        S.dot(F.col("ne"), F.col("qe")) / (F.col("qn") * F.col("nn")), 6
     )
     nodes = b.select(
         F.col("vec_id").alias("node"),
@@ -749,7 +749,7 @@ def sim_graph_ann_recall(spark, sf_dir):
     sym, _deg = _symmetrize_degrees(knn_edge_artifact(spark, sf_dir))
     emb = td(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     b = emb.select(
-        "vec_id", "embedding", S.norm(F.col("embedding"), 64).alias("nrm")
+        "vec_id", "embedding", S.norm(F.col("embedding")).alias("nrm")
     )
     q = b.filter(F.col("vec_id") % _ANN_QMOD == 7).select(
         F.col("vec_id").alias("qid"),
@@ -765,7 +765,7 @@ def sim_graph_ann_recall(spark, sf_dir):
         "node",
     )
     score = F.round(
-        S.dot(F.col("ne"), F.col("qe"), 64) / (F.col("qn") * F.col("nn")), 6
+        S.dot(F.col("ne"), F.col("qe")) / (F.col("qn") * F.col("nn")), 6
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("node"))
     truth = (

@@ -46,6 +46,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from target_parquet_spark.lineage import cut
 from target_parquet_spark.operators import similarity as S
 from target_parquet_spark.operators import text as X
 from target_parquet_spark.queries import query
@@ -71,11 +72,9 @@ def _sql_cos_micro(a: str, b: str) -> str:
     )
 
 
-def _cos_micro(a, b, dim=None):
-    """Spark twin of ``_sql_cos_micro``: cosine quantized to micro-units.
-    ``dim`` (statically-known width) selects the unrolled codegen fold —
-    bit-identical, see operators/similarity.dot."""
-    return F.round(S.cosine(a, b, dim) * 1000000).cast("long")
+def _cos_micro(a, b):
+    """Spark twin of ``_sql_cos_micro``: cosine quantized to micro-units."""
+    return F.round(S.cosine(a, b) * 1000000).cast("long")
 
 
 @query(
@@ -284,7 +283,7 @@ def sim_hard_negatives(spark, sf_dir):
             "query_label",
             F.col("vec_id").alias("neg_id"),
             F.col("label").alias("neg_label"),
-            _cos_micro(F.col("embedding"), F.col("_qv"), 64).alias("sim_micro"),
+            _cos_micro(F.col("embedding"), F.col("_qv")).alias("sim_micro"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -413,7 +412,7 @@ def sim_retrieval_metrics(spark, sf_dir):
         .select(
             "query_id",
             "vec_id",
-            _cos_micro(F.col("embedding"), F.col("_qv"), 64).alias("sim_micro"),
+            _cos_micro(F.col("embedding"), F.col("_qv")).alias("sim_micro"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -430,7 +429,7 @@ def sim_retrieval_metrics(spark, sf_dir):
         .select(
             "query_id",
             "vec_id",
-            _cos_micro(F.col("embedding"), F.col("_qv"), 64).alias("sim_micro"),
+            _cos_micro(F.col("embedding"), F.col("_qv")).alias("sim_micro"),
         )
     )
     ret = (
@@ -551,9 +550,10 @@ def sim_kcenter_greedy(spark, sf_dir):
         return F.round(total * 1000000).cast("long")
 
     seed = emb.filter(F.col("vec_id") == _KC_SEED_ID).collect()[0]["embedding"]
-    cur = emb.select(
-        "vec_id", "embedding", sqdist_to(seed).alias("dm")
-    ).localCheckpoint(eager=False)
+    cur = cut(
+        emb.select("vec_id", "embedding", sqdist_to(seed).alias("dm")),
+        eager=False,
+    )
     chosen = []
     for r in range(1, _KC_ROUNDS + 1):
         top = (
@@ -561,13 +561,16 @@ def sim_kcenter_greedy(spark, sf_dir):
         )
         chosen.append((r, top["vec_id"], top["dm"] / 1000000.0))
         if r < _KC_ROUNDS:
-            cur = cur.select(
-                "vec_id",
-                "embedding",
-                F.least(
-                    F.col("dm"), sqdist_to(top["embedding"])
-                ).alias("dm"),
-            ).localCheckpoint(eager=False)
+            cur = cut(
+                cur.select(
+                    "vec_id",
+                    "embedding",
+                    F.least(
+                        F.col("dm"), sqdist_to(top["embedding"])
+                    ).alias("dm"),
+                ),
+                eager=False,
+            )
     return spark.createDataFrame(
         chosen, "sel_round bigint, vec_id bigint, sel_dist double"
     )
@@ -984,12 +987,12 @@ def _sql_cos_micro_safe(a: str, b: str) -> str:
     )
 
 
-def _cos_micro_safe(a, b, dim=None):
+def _cos_micro_safe(a, b):
     """Spark twin of ``_sql_cos_micro_safe``."""
     return (
         F.when(
-            (S.dot(a, a, dim) > 0) & (S.dot(b, b, dim) > 0),
-            _cos_micro(a, b, dim),
+            (S.dot(a, a) > 0) & (S.dot(b, b) > 0),
+            _cos_micro(a, b),
         )
         .otherwise(F.lit(-2000000))
         .cast("long")
@@ -1079,7 +1082,6 @@ def sim_matryoshka_recall(spark, sf_dir):
                 _cos_micro_safe(
                     F.slice(F.col("embedding"), 1, d),
                     F.slice(F.col("_qv"), 1, d),
-                    dim=d,
                 ).alias(f"s{d}")
                 for d in _MRL_DIMS
             ],

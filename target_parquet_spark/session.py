@@ -83,16 +83,15 @@ def get_spark(
         # compilations (about 10 ms each).  At 1000 a warm pass compiles
         # none.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # Let HotSpot JIT long generated methods.  The unrolled
-        # fixed-width dot products (operators/similarity.dot with
-        # dim=...) emit one ~64-term arithmetic chain per call; the
-        # generated Java method exceeds HotSpot's 8 KB HugeMethodLimit,
-        # and a never-JIT'd codegen method runs in the bytecode
-        # interpreter — measured 65s vs 3.8s on the 4M-pair dot
-        # microbench (guide §4.2: per-task work).  Scale-independent: a
-        # real cluster sets the same flag on its executors (the
-        # executor option below is a no-op in local mode where
-        # executor == driver JVM).
+        # Let HotSpot JIT long generated methods: a generated Java
+        # method past HotSpot's 8 KB HugeMethodLimit otherwise runs in
+        # the bytecode interpreter.  Measured with the vector ops'
+        # higher-order fold (operators/similarity.dot) on a 15-query
+        # similarity subset at sf0.1: 58.5 s without the flag, 54.0 s
+        # with it (OPTIMIZATION_r10.md, "C HOF fold+flag").
+        # Scale-independent: a real cluster sets the same flag on its
+        # executors (the executor option below is a no-op in local mode
+        # where executor == driver JVM).
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

@@ -34,16 +34,7 @@ from pyspark.sql import functions as F
 from target_parquet_spark import sql_text as S
 from target_parquet_spark.schema import resolve_property
 
-__all__ = ["compile_predicate", "resolve_refs", "jsonschema_error_udf", "ValidationMode"]
-
-
-class ValidationMode:
-    """V4: strict -> fail the job on any invalid record; lenient (default)
-    -> the raw record passes through untouched (reference sinks.py:136-139
-    returns the unvalidated record on failure)."""
-
-    STRICT = "strict"
-    LENIENT = "lenient"
+__all__ = ["compile_predicate", "resolve_refs", "jsonschema_error_udf"]
 
 
 # Every predicate below is SQL text that parses as one operand: a

@@ -24,6 +24,26 @@ def spark():
 
 
 @pytest.fixture
+def enable_reliable_checkpoints(spark, tmp_path):
+    """Returns ``enable()``: gives the session a checkpoint directory,
+    which turns every lineage cut reliable, and returns its local path.
+    Teardown restores "no directory", so later tests keep local cuts."""
+    sc = spark.sparkContext
+
+    def enable():
+        ckpt = tmp_path / "ckpt"
+        sc.setCheckpointDir(str(ckpt))
+        return str(ckpt)
+
+    try:
+        yield enable
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None)
+        )
+
+
+@pytest.fixture
 def tmp_out(tmp_path):
     return str(tmp_path)
 

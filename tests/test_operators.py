@@ -364,11 +364,11 @@ def test_zorder_value_clamps_bit_budget(spark):
     assert vals[0] < vals[1]
 
 
-def test_unrolled_dot_kernel_matches_hof_fold_exactly(spark, monkeypatch):
-    """The SPARK_GRAFT_DOT_UNROLL=1 kernel must be bit-identical to the
-    default higher-order fold: same left-to-right IEEE op order, same
-    null poisoning (short array -> null), for both the double and the
-    int kernels."""
+def test_dot_fold_matches_python_left_to_right_sum(spark):
+    """dot and int_dot are one left-to-right fold: bit-identical to a
+    Python sum over the same products in index order (the IEEE op order
+    the DuckDB oracles replay), and a short array on either side
+    null-poisons the result, for both the double and the int kernels."""
     rows = [
         (list(float(((i * 7 + j) % 13) - 6) / 3.0 for j in range(64)),
          list(float(((i * 5 + 3 * j) % 11) - 5) / 7.0 for j in range(64)))
@@ -383,21 +383,19 @@ def test_unrolled_dot_kernel_matches_hof_fold_exactly(spark, monkeypatch):
         F.transform("b", lambda x: F.round(x * 100).cast("int")).alias("b"),
     )
 
-    fold_d = [r[0] for r in df.select(S.dot(F.col("a"), F.col("b"))).collect()]
-    fold_i = [
-        r[0] for r in ints.select(S.int_dot(F.col("a"), F.col("b"))).collect()
-    ]
-    monkeypatch.setattr(S, "_UNROLL_FIXED_DIM", True)
-    chain_d = [
-        r[0] for r in df.select(S.dot(F.col("a"), F.col("b"), 64)).collect()
-    ]
-    chain_i = [
-        r[0]
-        for r in ints.select(S.int_dot(F.col("a"), F.col("b"), 64)).collect()
-    ]
-    assert chain_d == fold_d  # exact, including the trailing None
-    assert chain_i == fold_i
-    assert chain_d[-1] is None and chain_i[-1] is None
+    def _fold(a, b, zero):
+        if len(a) != len(b):
+            return None
+        acc = zero
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    got_d = df.select(S.dot(F.col("a"), F.col("b")), "a", "b").collect()
+    got_i = ints.select(S.int_dot(F.col("a"), F.col("b")), "a", "b").collect()
+    assert [r[0] for r in got_d] == [_fold(r.a, r.b, 0.0) for r in got_d]
+    assert [r[0] for r in got_i] == [_fold(r.a, r.b, 0) for r in got_i]
+    assert got_d[-1][0] is None and got_i[-1][0] is None
 
 
 def test_lloyd_arrow_assignment_matches_expression_exactly(spark, sf_dir):
@@ -407,8 +405,6 @@ def test_lloyd_arrow_assignment_matches_expression_exactly(spark, sf_dir):
     K*dim path gate — same assignment argmin (same IEEE fold order,
     same -0.0 zero-norm guard, same lowest-k ties) and the same
     6dp-quantized means."""
-    import os
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
@@ -416,25 +412,15 @@ def test_lloyd_arrow_assignment_matches_expression_exactly(spark, sf_dir):
 
     for metric in ("cos", "l2"):
         for k in (4, 16):
-            prev = os.environ.get("SPARK_GRAFT_KMEANS_EXPR")
-            os.environ["SPARK_GRAFT_KMEANS_EXPR"] = "1"
-            try:
-                cb_expr = S.kmeans_codebook(
-                    emb, n_centroids=k, n_iters=2, metric=metric
-                )
-            finally:
-                if prev is None:
-                    os.environ.pop("SPARK_GRAFT_KMEANS_EXPR", None)
-                else:
-                    os.environ["SPARK_GRAFT_KMEANS_EXPR"] = prev
-            # the Arrow round, forced even below the K*dim size gate
-            cb_arrow = _kmeans_arrow_forced(SIM, emb, k, metric)
+            cb_expr = _kmeans_forced(SIM, emb, k, metric, arrow=False)
+            cb_arrow = _kmeans_forced(SIM, emb, k, metric, arrow=True)
             assert cb_arrow == cb_expr, f"metric={metric} k={k}"
 
 
-def _kmeans_arrow_forced(SIM, emb, k, metric):
-    """Train with the Arrow round regardless of the K*dim size gate, by
-    replicating kmeans_codebook's loop over the public helpers."""
+def _kmeans_forced(SIM, emb, k, metric, arrow):
+    """Train with the Arrow round (``arrow=True``) or the literal-
+    expression round regardless of the K*dim size gate, by replicating
+    kmeans_codebook's loop over its round helpers."""
     import math
 
     from pyspark.sql import functions as F
@@ -454,13 +440,16 @@ def _kmeans_arrow_forced(SIM, emb, k, metric):
                 for x in cv:
                     s += x * x
                 norms.append(math.sqrt(s))
-        fn = SIM._lloyd_round_partials(ordered, norms, metric, dim)
-        partials = e.select("_v").mapInArrow(
-            fn, "k int, dim int, s double, n long"
-        )
-        means = partials.groupBy("k", "dim").agg(
-            F.round(F.sum("s") / F.sum("n"), 6).alias("c")
-        )
+        if arrow:
+            fn = SIM._lloyd_round_partials(ordered, norms, metric, dim)
+            partials = e.select("_v").mapInArrow(
+                fn, "k int, dim int, s double, n long"
+            )
+            means = partials.groupBy("k", "dim").agg(
+                F.round(F.sum("s") / F.sum("n"), 6).alias("c")
+            )
+        else:
+            means = SIM._lloyd_round_expr(e, ordered, norms, metric)
         centroids = {}
         for r in means.collect():
             centroids.setdefault(int(r.k), [0.0] * dim)[r.dim] = float(r.c)

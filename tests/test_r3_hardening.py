@@ -307,41 +307,41 @@ def test_agg_approx_distinct_within_hll_tolerance(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_iterative_ops_identical_under_reliable_checkpoint(spark, tmp_path):
-    """connected_components and pagerank must produce identical results
-    in localCheckpoint (default) and reliable-checkpoint modes, and the
-    reliable mode must actually materialize RDD checkpoints in the dir."""
-    import os
-
+def _cc_and_pagerank(spark):
     from target_parquet_spark.operators.dedup import connected_components
     from target_parquet_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20), (3, 4)], "id_a long, id_b long"
     )
-    cc_local = sorted(map(tuple, connected_components(edges).collect()))
-    ckpt = str(tmp_path / "ckpt")
-    cc_rel = sorted(
-        map(tuple, connected_components(edges, checkpoint_dir=ckpt).collect())
-    )
-    assert cc_local == cc_rel
-    assert cc_local and {c for _n, c in cc_local} == {1, 10, 20}
-    # reliable mode wrote checkpoint data
-    found = any(files for _d, _s, files in os.walk(ckpt))
-    assert found, "no reliable checkpoint files materialized"
-
+    cc = sorted(map(tuple, connected_components(edges).collect()))
     pr_edges = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     sym = pr_edges.union(
         pr_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    pr_local = {r.node: round(r.rank, 10) for r in pagerank(sym, iters=3).collect()}
-    pr_rel = {
-        r.node: round(r.rank, 10)
-        for r in pagerank(sym, iters=3, checkpoint_dir=str(tmp_path / "ckpt2")).collect()
-    }
+    pr = {r.node: round(r.rank, 10) for r in pagerank(sym, iters=3).collect()}
+    return cc, pr
+
+
+def test_iterative_ops_identical_under_reliable_checkpoint(
+    spark, enable_reliable_checkpoints
+):
+    """connected_components (lazy cuts) and pagerank (eager cuts) must
+    produce identical results with local cuts (no checkpoint directory)
+    and with reliable cuts (the session has one), and the reliable runs
+    must write RDD checkpoint files into the directory."""
+    import os
+
+    cc_local, pr_local = _cc_and_pagerank(spark)
+    ckpt = enable_reliable_checkpoints()
+    cc_rel, pr_rel = _cc_and_pagerank(spark)
+    assert cc_local == cc_rel
+    assert cc_local and {c for _n, c in cc_local} == {1, 10, 20}
     assert pr_local == pr_rel
+    found = any(files for _d, _s, files in os.walk(ckpt))
+    assert found, "no reliable checkpoint files materialized"
 
 
 # ---------------------------------------------------------------------------

@@ -155,6 +155,23 @@ def test_integral_json_number_in_integer_column(spark, tmp_path):
     assert got == {0: 7, 1: 100, 2: 0, 3: None, 4: None, 5: None, 6: 42, 7: 42}
 
 
+def test_exact_compat_integer_outside_int64_is_null(spark, tmp_path):
+    """exact_compat decodes an integer column with the reference's int():
+    7.0 -> 7 and 7.9 -> 7 (truncation is reference parity), while a value
+    past int64 (1e30) is NULL instead of failing the Arrow batch."""
+    path = tmp_path / "in.jsonl"
+    path.write_text("\n".join([
+        _msg(type="SCHEMA", stream="s", key_properties=["id"],
+             schema=_schema({"id": {"type": ["integer"]},
+                             "n": {"type": ["integer", "null"]}})),
+    ] + [
+        _msg(type="RECORD", stream="s", record={"id": i, "n": n})
+        for i, n in enumerate([1e30, 7.0, 7.9])
+    ]))
+    df = SingerTarget(spark, {"exact_compat": True}).read_records(str(path))
+    assert {r.id: r.n for r in df.collect()} == {0: None, 1: 7, 2: 7}
+
+
 def test_strict_null_in_non_nullable_column_fails_both(spark, tmp_path):
     """Strict mode rejects a null in a non-nullable column (the record
     omits it, which the JSON schema itself allows) before writing."""
